@@ -26,6 +26,8 @@ arbitrary DataFrames.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -420,14 +422,6 @@ def shingle_hashes(text_col: Column | str = "text") -> Column:
     return F.transform(g, lambda x: x % F.lit(MERSENNE31))
 
 
-def word_hashes(text_col: Column | str = "text") -> Column:
-    """Shared polynomial hash of each distinct word — the word-SET
-    token unit (values < 10⁹+7 < 2³¹−1, directly mixable)."""
-    from piper_spark.functions.text import _winnow_word_hash
-
-    return F.transform(F.array_distinct(F.split(text_col, " ")), _winnow_word_hash)
-
-
 def minhash_signature(text_col: Column | str = "text") -> list[Column]:
     """k minhash values over word shingles as array expressions.
 
@@ -507,37 +501,19 @@ def minhash_from_gram_arrays(ga: DataFrame, id_col: str = "doc_id") -> DataFrame
 
 
 def lsh_candidate_pairs(sigs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Banded-LSH candidate (id1 < id2) pairs from a signature relation.
-
-    Bands of 2 minhashes → 62-bit band key (mh·2³¹ + mh', collision-
-    free since each mh < 2³¹−1) → self-equi-join on (band, key). The
-    only shuffle is on the band-key; pair explosion is bounded by
-    bucket sizes, never n². No global sort — candidate pairs feed a
-    verifier or a keep/drop vote, not a report.
+    """Banded-LSH candidate (id1, id2) pairs from a minhash signature
+    relation: bands of 2 minhashes → 62-bit band key (mh·2³¹ + mh',
+    collision-free since each mh < 2³¹−1), joined by
+    :func:`~piper_spark.functions.lsh.banded_pairs`. No global sort —
+    candidate pairs feed a verifier or a keep/drop vote, not a report.
     """
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                (
-                    F.shiftleft(F.col(f"mh{2 * b}"), 31) + F.col(f"mh{2 * b + 1}")
-                ).alias("bh"),
-            )
-            for b in range(MINHASH_BANDS)
-        ]
-    )
-    buckets = sigs.select(id_col, F.explode(bands).alias("bb")).select(
-        F.col(id_col).alias("id"),
-        F.col("bb.band").alias("band"),
-        F.col("bb.bh").alias("bh"),
-    )
-    a, b = buckets.alias("a"), buckets.alias("b")
-    return (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.bh") == F.col("b.bh")))
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"))
-        .distinct()
-    )
+    from piper_spark.functions.lsh import banded_pairs
+
+    bands = [
+        F.shiftleft(F.col(f"mh{2 * b}"), 31) + F.col(f"mh{2 * b + 1}")
+        for b in range(MINHASH_BANDS)
+    ]
+    return banded_pairs(sigs, bands, id_col=id_col)
 
 
 def simhash_signatures(docs: DataFrame, id_col: str = "doc_id",
@@ -653,22 +629,13 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-9 VERDICT item 1); recall vs `dedup_jaccard_shingle` is
     additionally asserted in tests/test_properties.py.
     """
-    # Materialize signatures once before the self-join — the LSH
-    # candidate join reads the signature relation twice, and in a real
-    # pipeline signatures are a persisted table between stages.
-    # persist(DISK_ONLY) keeps the lineage (recomputable after executor
-    # loss, unlike localCheckpoint) without holding executor memory.
-    # CACHE LIFETIME: the caller owns the persisted relation — this
-    # function returns a lazy plan, so it cannot unpersist before the
-    # consuming action. Long-lived sessions should
-    # `spark.catalog.clearCache()` (or unpersist the input lineage)
-    # after consuming the pairs, as bench.py and the pipeline do.
-    # eager_fill (round 15, VERDICT items 1+3): the LSH self-join's two
-    # aliases otherwise RACE to fill this cache inside one job — both
+    # DISK_ONLY keeps the lineage (recomputable after executor loss,
+    # unlike localCheckpoint) without holding executor memory.
+    # eager_fill (round 15, VERDICT items 1+3): the two join sides
+    # otherwise RACE to fill this cache inside one job — both
     # concurrently recompute the whole gram-fold signature build, and
     # the contention grows with core count (this key's r13→r14 ~4×
-    # "regression" was exactly this race on a 32-core run, not a plan
-    # change: the dedup.py diff across those rounds is docstring-only).
+    # "regression" was exactly this race on a 32-core run).
     sigs = eager_fill(
         minhash_signatures(table(spark, sf_dir, "documents")).persist(
             StorageLevel.DISK_ONLY
@@ -833,50 +800,37 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     move there is a WIDER SIGNATURE — implemented as `dedup_simhash128`
     (4×32 bands over 128 bits: same pigeonhole, same plan shape) — not
     wider bands over 64 bits, which would break the recall guarantee."""
-    # Materialized once — see dedup_minhash note (caller owns the cache
-    # lifetime; clearCache()/unpersist after the consuming action).
-    # eager_fill: the banded self-join reads this from two aliases —
-    # without the fill both race to compute the vote build (VERDICT 1).
+    # eager_fill: the same two-side cache-fill race as dedup_minhash.
     d = eager_fill(
         simhash_signatures(table(spark, sf_dir, "documents")).persist(
             StorageLevel.DISK_ONLY
         )
     )
-    return _simhash64_pairs(d)
+    return _simhash_pairs(d, ["sh"])
 
 
-def _simhash64_pairs(d: DataFrame) -> DataFrame:
-    """(id1, id2, hamming) Hamming ≤ 3 pairs from a PERSISTED 64-bit
-    signature relation — the banding stages of `dedup_simhash`,
-    factored so `dedup_ensemble` can vote on the spine's shared
-    signatures. Caller persists `d` (the self-join reads it twice)."""
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.shiftright(F.col("sh"), 16 * b)
-                .bitwiseAND(F.lit(0xFFFF))
-                .alias("bh"),
-            )
-            for b in range(4)
-        ]
+def _simhash_pairs(d: DataFrame, halves: list[str]) -> DataFrame:
+    """(id1, id2, hamming) Hamming ≤ 3 pairs from a SimHash signature
+    relation whose 64-bit `halves` hold the signature: 4 bands of
+    16·len(halves) bits (pigeonhole: ≤ 3 flipped bits leave one band
+    untouched) joined by :func:`~piper_spark.functions.lsh.banded_pairs`.
+    Shared by `dedup_simhash` (["sh"]), `dedup_simhash128`
+    (["sh_lo", "sh_hi"]) and `dedup_ensemble`."""
+    from piper_spark.functions.lsh import banded_pairs
+
+    width = 16 * len(halves)
+    bands = [
+        F.shiftrightunsigned(h, width * i).bitwiseAND(F.lit((1 << width) - 1))
+        for h in halves
+        for i in range(64 // width)
+    ]
+    hamming = reduce(
+        Column.__add__,
+        [F.bit_count(F.col(f"{h}1").bitwiseXOR(F.col(f"{h}2"))) for h in halves],
     )
-    buckets = d.select("doc_id", "sh", F.explode(bands).alias("bb")).select(
-        "doc_id", "sh", F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh")
-    )
-    a, b = buckets.alias("a"), buckets.alias("b")
-    hamming = F.bit_count(F.col("a.sh").bitwiseXOR(F.col("b.sh")))
-    return (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.bh") == F.col("b.bh")))
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("id1"),
-            F.col("b.doc_id").alias("id2"),
-            hamming.alias("hamming"),
-        )
-        .filter(F.col("hamming") <= 3)
-        .distinct()
-    )
+    return banded_pairs(
+        d, bands, id_col="doc_id", keep=halves, verify=hamming <= 3
+    ).select("id1", "id2", hamming.alias("hamming"))
 
 
 def simhash128_signatures(
@@ -992,42 +946,13 @@ def dedup_simhash128(spark: SparkSession, sf_dir: str) -> DataFrame:
     relationship between the two widths is pinned by property tests
     (a pair at 64-bit Hamming 0 from identical text is at 128-bit
     Hamming 0 too, and the pigeonhole test runs at both widths)."""
-    # eager_fill: same two-alias cache-fill race as dedup_simhash.
+    # eager_fill: the same two-side cache-fill race as dedup_minhash.
     d = eager_fill(
         simhash128_signatures(table(spark, sf_dir, "documents")).persist(
             StorageLevel.DISK_ONLY
         )
     )
-    band_vals = [
-        F.col("sh_lo").bitwiseAND(F.lit(0xFFFFFFFF)),
-        F.shiftrightunsigned("sh_lo", 32),
-        F.col("sh_hi").bitwiseAND(F.lit(0xFFFFFFFF)),
-        F.shiftrightunsigned("sh_hi", 32),
-    ]
-    buckets = d.select(
-        "doc_id",
-        "sh_lo",
-        "sh_hi",
-        F.posexplode(F.array(*band_vals)).alias("band", "bh"),
-    )
-    a, b = buckets.alias("a"), buckets.alias("b")
-    hamming = F.bit_count(
-        F.col("a.sh_lo").bitwiseXOR(F.col("b.sh_lo"))
-    ) + F.bit_count(F.col("a.sh_hi").bitwiseXOR(F.col("b.sh_hi")))
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band")) & (F.col("a.bh") == F.col("b.bh")),
-        )
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("id1"),
-            F.col("b.doc_id").alias("id2"),
-            hamming.alias("hamming"),
-        )
-        .filter(F.col("hamming") <= 3)
-        .distinct()
-    )
+    return _simhash_pairs(d, ["sh_lo", "sh_hi"])
 
 
 def near_dup_signature_stage(
@@ -1563,11 +1488,11 @@ def dedup_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     are pair-keyed on id pairs, never corpus-keyed."""
     docs = table(spark, sf_dir, "documents")
     spine = near_dup_spine(docs)
-    # Each signature relation feeds a SELF-join (two aliases) — persist
-    # so the aggregate runs once per family (the dedup_minhash lesson).
     # No per-family eager fill: with the spine stage already filled,
     # each family build is a cheap agg off the cache and the r15 A/B
     # measured the three extra fill jobs as a net cost (1.22x).
+    # Persisted here, not by the pair kernel, so this function can
+    # release them once the votes are materialized.
     fps = spine["winnow_fps"].persist(StorageLevel.DISK_ONLY)
     mh_sigs = spine["minhash_sigs"].persist(StorageLevel.DISK_ONLY)
     mh = (
@@ -1577,7 +1502,7 @@ def dedup_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sim_sigs = spine["simhash_sigs"].persist(StorageLevel.DISK_ONLY)
     sh = (
-        _simhash64_pairs(sim_sigs)
+        _simhash_pairs(sim_sigs, ["sh"])
         .select("id1", "id2")
         .withColumn("in_simhash", F.lit(1).cast("long"))
     )

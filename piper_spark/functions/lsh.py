@@ -52,11 +52,13 @@ dedup surface); mandated by the LLM-pipeline north star.
 from __future__ import annotations
 
 import math
+from collections.abc import Callable, Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from piper_spark.functions.similarity import cosine
 from piper_spark.registry import register
@@ -121,6 +123,81 @@ def derived_band_bits(n_rows: int) -> int:
             math.ceil(math.log2(max(int(n_rows), 2))) + _DERIVED_BITS_MARGIN,
         ),
     )
+
+
+def banded_pairs(
+    sigs: DataFrame,
+    bands: Sequence[Column],
+    *,
+    id_col: str,
+    keep: Sequence[str] = (),
+    probes: Callable[[Column], list[Column]] | None = None,
+    verify: Column | None = None,
+) -> DataFrame:
+    """Banded-LSH self-join: candidate (id1 < id2) pairs of rows of
+    `sigs` that agree on at least one band. The ONE kernel behind every
+    near-dup family (text minhash/simhash, embedding sign-LSH, image
+    pHash, audio and video fingerprints); callers own only their band
+    geometry and verify rule.
+
+    - **Persist.** Both join sides read `sigs`, so an unpersisted
+      `sigs` is persisted here (default level); otherwise each side
+      re-runs the whole signature build (a Python pass, a min-
+      aggregate). A caller that already persisted it — at another
+      level, or eagerly filled (`session.eager_fill`) — is taken as is.
+      The lifetime is the caller's: the result is lazy, so release
+      with ``spark.catalog.clearCache()`` after the consuming action.
+    - **Bands.** Each entry of `bands` is one band value per row; a
+      ``posexplode`` turns them into (band_id, band_val) rows and the
+      join is an equi-join on both. One band is a plain equi-join on
+      band_val, no explode. The only shuffle is on the band key, and
+      pair explosion is bounded by bucket sizes, never n².
+    - **Probes.** ``probes(v)`` lists extra values for band value `v`
+      (multi-probe, e.g. its Hamming-1 neighbours). They are emitted on
+      the id1 side only, which covers every pair because the probe
+      relation is symmetric. Both sides are then corpus-scaled, so the
+      un-probed side carries a ``shuffle_hash`` hint: a size estimate
+      through the explode can undershoot and pick a broadcast that does
+      not fit at scale.
+    - **Verify.** `verify` filters candidates on the `keep` columns,
+      suffixed 1 and 2 (``keep=["sh"]`` gives ``sh1``, ``sh2``).
+    - **Distinct.** With more than one band, or with probes, a pair can
+      meet in several buckets, so the result is made distinct; with one
+      band and no probes every pair meets once and no aggregate is run.
+
+    Returns (id1, id2, <keep>1..., <keep>2...).
+    """
+    if sigs.storageLevel == StorageLevel.NONE:
+        sigs = sigs.persist()
+    keys = ["band_val"] if len(bands) == 1 else ["band_id", "band_val"]
+
+    def side(sfx: str) -> DataFrame:
+        cols = [F.col(id_col).alias(f"id{sfx}")]
+        cols += [F.col(k).alias(f"{k}{sfx}") for k in keep]
+        if len(bands) == 1:
+            rel = sigs.select(*cols, bands[0].alias("band_val"))
+        else:
+            rel = sigs.select(
+                *cols, F.posexplode(F.array(*bands)).alias("band_id", "band_val")
+            )
+        if probes is not None and sfx == "1":
+            v = F.col("band_val")
+            rel = rel.select(
+                *[c for c in rel.columns if c != "band_val"],
+                F.explode(F.array(v, *probes(v))).alias("band_val"),
+            )
+        return rel
+
+    a, b = side("1"), side("2")
+    if probes is not None:
+        b = b.hint("shuffle_hash")
+    pairs = a.join(b, keys).filter(F.col("id1") < F.col("id2"))
+    if verify is not None:
+        pairs = pairs.filter(verify)
+    pairs = pairs.select(
+        "id1", "id2", *[f"{k}{sfx}" for sfx in "12" for k in keep]
+    )
+    return pairs.distinct() if len(bands) > 1 or probes is not None else pairs
 
 
 def _planes(n_planes: int) -> np.ndarray:
@@ -335,22 +412,11 @@ def lsh_near_dup_pairs(
     exact-cosine verify over any (vec_id, ed array<double>) frame."""
     from piper_spark.functions.similarity import dot, l2_norm
 
-    # persist: BOTH candidate self-join aliases read the signature
-    # relation — without this each alias re-ran the n_planes-dot-
-    # product Arrow pass over the whole union (round 15; the plan
-    # showed sig(ed) twice). Caller-owned lifetime via clearCache,
-    # the dedup_minhash convention.
-    bands = band_signatures(un, n_planes, bits_per_band).persist()
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(F.col("a.vec_id").alias("id1"), F.col("b.vec_id").alias("id2"))
-        .distinct()
+    sig = _band_sig_udf(n_planes, bits_per_band)
+    sigs = un.select("vec_id", sig(F.col("ed")).alias("bv"))
+    n_bands = n_planes // bits_per_band
+    cand = banded_pairs(
+        sigs, [F.col("bv")[i] for i in range(n_bands)], id_col="vec_id"
     )
     # Verify-pass norms are computed ONCE PER VECTOR here, not once per
     # candidate pair: with bits = log2(n) the candidate count grows ~n·C
@@ -411,8 +477,7 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     un = planted_union(spark, sf_dir).persist()
     # persist: the query-signature filter AND the bucket probe both
-    # read the signature relation — one Arrow signature pass, not two
-    # (round 15; see lsh_near_dup_pairs).
+    # read the signature relation — one Arrow signature pass, not two.
     bands = band_signatures(un, _ANN_PLANES, _ANN_BITS).persist()
     qb = bands.filter(F.col("vec_id") == 0).select(
         F.col("band_id").alias("qband_id"), F.col("band_val").alias("qband_val")

@@ -139,14 +139,6 @@ def sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _codebook_row(centroids: DataFrame) -> DataFrame:
-    """Collapse (cid, cd) centroids into ONE row holding the codebook as
-    an array of structs, sorted by cid (deterministic)."""
-    return centroids.agg(
-        F.sort_array(F.collect_list(F.struct("cid", "cd"))).alias("cb")
-    )
-
-
 def assign_cells(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
     """Assign each vector to its nearest centroid — fully NARROW.
 

@@ -702,8 +702,8 @@ def pipeline_audio_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
         audio_near_dup_pairs,
     )
 
-    # persist: the fingerprint relation feeds the pair self-join (both
-    # aliases) AND the survivor anti-join (caller owns the lifetime).
+    # persist: the survivor anti-join reads the fingerprint relation
+    # too, not only the pair join (caller owns the lifetime).
     f = _audio_fp_rel(spark, sf_dir, min_frames=AUDIO_FP_BAND_BITS + 2).persist()
     pairs = audio_near_dup_pairs(f)
     drops = pairs.select(F.col("id2").alias("doc_id")).distinct()
@@ -787,8 +787,8 @@ def pipeline_video_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
         table(spark, sf_dir, "documents").select("doc_id", "text")
     )
     f = _video_fh_rel(d, min_nf=2 * k + 1)
-    # persist: the rep relation feeds the band self-join (both
-    # aliases) AND the survivor anti-join.
+    # persist: the survivor anti-join reads the rep relation too, not
+    # only the pair join.
     reps = (
         f.groupBy("sig", "ns")
         .agg(F.min("doc_id").alias("doc_id"))

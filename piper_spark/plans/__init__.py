@@ -3,5 +3,4 @@
 from piper_spark.plans.explain import (  # noqa: F401
     executed_plan,
     plan_flags,
-    scan_read_schemas,
 )

@@ -26,12 +26,6 @@ def executed_plan(df: DataFrame, run: bool = False) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def scan_read_schemas(df: DataFrame) -> list[str]:
-    """ReadSchema of every file scan — verify column pruning."""
-    plan = executed_plan(df)
-    return re.findall(r"ReadSchema: (struct<[^>]*>?)", plan)
-
-
 def plan_flags(df: DataFrame) -> dict[str, bool]:
     """Presence of the plan features we care about, red flags included."""
     plan = executed_plan(df)

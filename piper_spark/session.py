@@ -204,15 +204,11 @@ def eager_fill(df: DataFrame) -> DataFrame:
     costs its one extra job — the A/B in OPTIMIZATION_r15.md decides
     per site. On a multi-executor cluster the racing stages sit on
     DIFFERENT executors and genuinely duplicate the build, which is
-    where this discipline pays. `SPARK_GRAFT_EAGER_FILL=0` disables
-    every fill (the measurement hook for that A/B).
+    where this discipline pays (`AB_EAGER_FILL_r15.json` holds the
+    per-site measurements).
     """
-    if _EAGER_FILL_ENABLED:
-        df.count()
+    df.count()
     return df
-
-
-_EAGER_FILL_ENABLED = os.environ.get("SPARK_GRAFT_EAGER_FILL", "1") != "0"
 
 
 #: (session, sf_dir, table) → analyzed DataFrame. Session-lifetime PLAN

@@ -2796,7 +2796,7 @@ def img_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tests/test_multimodal.py). The exact ground-truth twin for
     byte-identical images is `dedup_exact_hash`.
     """
-    from piper_spark.functions.lsh import derived_band_bits
+    from piper_spark.functions.lsh import banded_pairs, derived_band_bits
     from piper_spark.session import row_count
 
     # Corpus magnitude from parquet footers — no Spark job, and the RAW
@@ -2814,69 +2814,24 @@ def img_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert len(offsets) == 4, f"window geometry broke: bpb={bpb} → {offsets}"
     docs = with_payload(table(spark, sf_dir, "documents")).select("doc_id", "payload")
     d = spread_for_decode(docs)
-    hashes = d.mapInPandas(_phash_batches, schema="doc_id long, phash long").persist()
+    hashes = d.mapInPandas(_phash_batches, schema="doc_id long, phash long")
 
     def window(off: int):
         return F.shiftrightunsigned("phash", off).bitwiseAND(F.lit(mask))
 
-    bands = hashes.select(
-        "doc_id",
-        "phash",
-        F.posexplode(F.array(*[window(off) for off in offsets])).alias(
-            "band_id", "band_val"
-        ),
-    )
-    # Probe side: per window, the exact value plus all bpb one-bit
-    # flips. Emitted on ONE side only — Hamming is symmetric, so probes
-    # from the a-side alone cover every (id1 < id2) pair.
-    probes = hashes.select(
-        "doc_id",
-        "phash",
-        F.posexplode(
-            F.array(
-                *[
-                    F.array(
-                        window(off),
-                        *[
-                            window(off).bitwiseXOR(F.lit(1 << j))
-                            for j in range(bpb)
-                        ],
-                    )
-                    for off in offsets
-                ]
-            )
-        ).alias("band_id", "vals"),
-    ).select("doc_id", "phash", "band_id", F.explode("vals").alias("band_val"))
-    # shuffle_hash hint: BOTH sides are corpus-scaled (probes is a
-    # (bpb+1)×4 explode of every document), so broadcast is never the
-    # right strategy here — but Catalyst's size estimate THROUGH the
-    # explode can undershoot and pick BroadcastHashJoin, which at the
-    # 700k-doc scale corpus tried to build a ~1.3 GB driver-side table
-    # and died with notEnoughMemoryToBuildAndBroadcastTable. The hint
-    # pins the keyed shuffle join (build side = the un-probed bands,
-    # the smaller relation) at every scale.
-    a, b = probes.alias("a"), bands.hint("shuffle_hash").alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("id1"),
-            F.col("b.doc_id").alias("id2"),
-            F.bit_count(F.col("a.phash").bitwiseXOR(F.col("b.phash"))).alias("hd"),
-        )
-        .distinct()
-    )
+    hamming = F.bit_count(F.col("phash1").bitwiseXOR(F.col("phash2")))
     # No trailing orderBy: like every other near-dup op, pairs return
     # unsorted — the output is pair-report-sized, but a global sort is
     # still a needless range exchange a consumer can add if it wants
     # one (round-6 VERDICT watch-point).
-    return cand.select(
-        "id1", "id2", F.col("hd").cast("long").alias("hamming")
-    ).filter(F.col("hamming") <= 6)
+    return banded_pairs(
+        hashes,
+        [window(off) for off in offsets],
+        id_col="doc_id",
+        keep=["phash"],
+        probes=lambda v: [v.bitwiseXOR(F.lit(1 << j)) for j in range(bpb)],
+        verify=hamming <= 6,
+    ).select("id1", "id2", hamming.cast("long").alias("hamming"))
 
 
 # --- Spark ImageSchema struct source -------------------------------------
@@ -3189,36 +3144,22 @@ _AUDIO_PAIRS_SQL = f"""
 
 def audio_near_dup_pairs(f: DataFrame) -> DataFrame:
     """Verified audio near-dup pairs (id1, id2, hamming) from a
-    fingerprint relation — the band equi-join + prefix-Hamming verify,
-    extracted so `dedup_audio` and `pipeline_audio_curate` share ONE
-    definition (callers pass a PERSISTED relation: the self-join reads
-    it from both aliases)."""
+    fingerprint relation — the low-bits band equi-join + prefix-Hamming
+    verify, extracted so `dedup_audio` and `pipeline_audio_curate`
+    share ONE definition."""
+    from piper_spark.functions.lsh import banded_pairs
+
     band = F.col("fp").bitwiseAND(F.lit((1 << AUDIO_FP_BAND_BITS) - 1))
-    a = f.select(
-        F.col("doc_id").alias("id1"),
-        F.col("n_bits").alias("nb1"),
-        F.col("fp").alias("fp1"),
-        band.alias("band"),
-    )
-    b = f.select(
-        F.col("doc_id").alias("id2"),
-        F.col("n_bits").alias("nb2"),
-        F.col("fp").alias("fp2"),
-        band.alias("band"),
-    )
     ham = F.expr(
         "bit_count((fp1 ^ fp2) & "
-        "(shiftleft(cast(1 as bigint), cast(least(nb1, nb2) as int)) - 1))"
+        "(shiftleft(cast(1 as bigint), cast(least(n_bits1, n_bits2) as int)) - 1))"
     ).cast("long")
-    return (
-        a.join(b, "band")
-        .filter(
-            (F.col("id1") < F.col("id2"))
-            & (F.abs(F.col("nb1") - F.col("nb2")) <= AUDIO_FP_MAX_DLEN)
-        )
-        .select("id1", "id2", ham.alias("hamming"))
-        .filter(F.col("hamming") <= AUDIO_FP_MAX_HAM)
+    verify = (F.abs(F.col("n_bits1") - F.col("n_bits2")) <= AUDIO_FP_MAX_DLEN) & (
+        ham <= AUDIO_FP_MAX_HAM
     )
+    return banded_pairs(
+        f, [band], id_col="doc_id", keep=["n_bits", "fp"], verify=verify
+    ).select("id1", "id2", ham.alias("hamming"))
 
 
 @register(
@@ -3247,12 +3188,7 @@ def dedup_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     # n_bits > BAND_BITS ⟺ n_frames ≥ BAND_BITS + 2, applied INSIDE the
     # relation on the byte-length-derived frame count (see _audio_fp_rel
     # on why filtering the output n_bits is a performance trap).
-    # persist: the self-join reads the fingerprint relation from BOTH
-    # aliases, and each downstream reference (band key + fp output)
-    # would otherwise re-evaluate the energy fold — one (doc_id,
-    # n_bits, fp) row is 24 bytes, the same signature-table persist
-    # dedup_simhash uses (caller owns the cache lifetime).
-    f = _audio_fp_rel(spark, sf_dir, min_frames=AUDIO_FP_BAND_BITS + 2).persist()
+    f = _audio_fp_rel(spark, sf_dir, min_frames=AUDIO_FP_BAND_BITS + 2)
     return audio_near_dup_pairs(f)
 
 
@@ -3470,40 +3406,25 @@ def video_near_dup_pairs(f: DataFrame, k: int) -> DataFrame:
     """Verified video near-dup pairs (id1, id2, hamming) from a
     signature relation — band equi-join on the Horner-packed opening-k
     frames + aligned-frame Hamming verify, extracted so `dedup_video`
-    and `pipeline_video_curate` share ONE definition (callers pass a
-    PERSISTED relation: the self-join reads both aliases)."""
-    band = video_band_col(k)
-    a = f.select(
-        F.col("doc_id").alias("id1"),
-        F.col("ns").alias("ns1"),
-        F.col("sig").alias("sg1"),
-        band.alias("band"),
-    )
-    b = f.select(
-        F.col("doc_id").alias("id2"),
-        F.col("ns").alias("ns2"),
-        F.col("sig").alias("sg2"),
-        band.alias("band"),
-    )
+    and `pipeline_video_curate` share ONE definition."""
+    from piper_spark.functions.lsh import banded_pairs
+
     m = F.least(F.col("ns1"), F.col("ns2")).cast("int")
     ham = F.aggregate(
         F.zip_with(
-            F.slice(F.col("sg1"), 1, m),
-            F.slice(F.col("sg2"), 1, m),
+            F.slice(F.col("sig1"), 1, m),
+            F.slice(F.col("sig2"), 1, m),
             lambda x, y: F.bit_count(x.bitwiseXOR(y)).cast("long"),
         ),
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
-    return (
-        a.join(b, "band")
-        .filter(
-            (F.col("id1") < F.col("id2"))
-            & (F.abs(F.col("ns1") - F.col("ns2")) <= VIDEO_FP_MAX_DNS)
-        )
-        .select("id1", "id2", ham.alias("hamming"))
-        .filter(F.col("hamming") <= VIDEO_FP_MAX_HAM)
+    verify = (F.abs(F.col("ns1") - F.col("ns2")) <= VIDEO_FP_MAX_DNS) & (
+        ham <= VIDEO_FP_MAX_HAM
     )
+    return banded_pairs(
+        f, [video_band_col(k)], id_col="doc_id", keep=["ns", "sig"], verify=verify
+    ).select("id1", "id2", ham.alias("hamming"))
 
 
 @register(
@@ -3531,8 +3452,8 @@ def dedup_video(spark: SparkSession, sf_dir: str) -> DataFrame:
     (shingle-Jaccard >= 0.97, pinned in tests) and the Hamming gap to
     the first false band collision is > VIDEO_FP_MAX_HAM.
 
-    Scale: the signature relation is persisted (both self-join aliases
-    read it — the dedup_audio persist rule), and the band width is
+    Scale: the signature relation is persisted by the pair kernel
+    (`lsh.banded_pairs`), and the band width is
     CORPUS-SIZE-DERIVED like `dedup_lsh_cosine`'s: the band hashes the
     first `video_band_frames(n)` sampled frames (Horner-packed, 24
     bits per frame), so random band collisions (~n²/2^(24k)) stay
@@ -3550,7 +3471,7 @@ def dedup_video(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread_for_decode(
         table(spark, sf_dir, "documents").select("doc_id", "text")
     )
-    f = _video_fh_rel(d, min_nf=2 * k + 1).persist()
+    f = _video_fh_rel(d, min_nf=2 * k + 1)
     return video_near_dup_pairs(f, k)
 
 
@@ -4000,50 +3921,24 @@ def dedup_phash_int(spark: SparkSession, sf_dir: str) -> DataFrame:
     in SQL, so the PAIR SEMANTICS (not just the signature) are pinned
     across engines.
     """
+    from piper_spark.functions.lsh import banded_pairs
+
     d = spread_for_decode(
         with_payload(table(spark, sf_dir, "documents")).select("doc_id", "payload")
     )
-    # persist: the probe side AND the band side both read the hash
-    # relation — without this the whole image-decode Arrow pass ran
-    # once per join side (round 15; the plan showed the MapInPandas
-    # twice). Two longs per doc; caller-owned lifetime via clearCache.
     hashes = d.mapInPandas(
         _phash_int_plant_batches, schema="doc_id long, phash long"
-    ).persist()
+    )
 
     def window(w: int):
         return F.shiftrightunsigned("phash", 16 * w).bitwiseAND(F.lit(65535))
 
-    bands = hashes.select(
-        "doc_id",
-        "phash",
-        F.posexplode(F.array(*[window(w) for w in range(4)])).alias(
-            "band_id", "bv"
-        ),
-    )
-    probes = bands.select(
-        "doc_id",
-        "phash",
-        "band_id",
-        F.explode(
-            F.array(F.col("bv"), *[F.col("bv").bitwiseXOR(F.lit(1 << j))
-                                   for j in range(16)])
-        ).alias("bv"),
-    )
-    a = probes.select(
-        F.col("doc_id").alias("id1"), F.col("phash").alias("h1"),
-        "band_id", "bv",
-    )
-    b = bands.select(
-        F.col("doc_id").alias("id2"), F.col("phash").alias("h2"),
-        "band_id", "bv",
-    )
-    ham = F.bit_count(F.col("h1").bitwiseXOR(F.col("h2")))
-    return (
-        a.join(b, ["band_id", "bv"])
-        .filter(F.col("id1") < F.col("id2"))
-        .select("id1", "id2", "h1", "h2")
-        .distinct()
-        .filter(ham <= PHASH_INT_HAM_T)
-        .select("id1", "id2", ham.cast("int").alias("hamming"))
-    )
+    ham = F.bit_count(F.col("phash1").bitwiseXOR(F.col("phash2")))
+    return banded_pairs(
+        hashes,
+        [window(w) for w in range(4)],
+        id_col="doc_id",
+        keep=["phash"],
+        probes=lambda v: [v.bitwiseXOR(F.lit(1 << j)) for j in range(16)],
+        verify=ham <= PHASH_INT_HAM_T,
+    ).select("id1", "id2", ham.cast("int").alias("hamming"))

@@ -139,9 +139,9 @@ def stream_dedup(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
 
 
 def _fold_hwm(maxv, cnt, pdfs):  # pragma: no cover — runs in worker
-    """Shared running-max fold: gather the group's Arrow chunks (they
-    arrive in arbitrary order; the fold is order-dependent), sort ONCE
-    by (ts, event_id), fold. Used by BOTH stateful APIs."""
+    """Running-max fold: gather the group's Arrow chunks (they arrive
+    in arbitrary order; the fold is order-dependent), sort ONCE by
+    (ts, event_id), fold."""
     import pandas as pd  # local import: executes in the Python worker
 
     chunks = [pdf for pdf in pdfs]
@@ -169,167 +169,17 @@ def _hwm_update(key, pdfs, state):  # pragma: no cover — runs in worker
     yield pd.DataFrame({"user_id": [key[0]], "n_records": [cnt]})
 
 
-def transform_with_state_available() -> bool:
-    """True when Spark 4's `transformWithStateInPandas` can actually run
-    here: its Python driver worker imports `google.protobuf` (absent in
-    some containers, including this build's).
-
-    This is a PRECONDITION check, not the dispatch default: the three
-    custom stateful ops take `use_tws=True` as an explicit OPT-IN and
-    default to the universally-available `applyInPandasWithState`.
-    Availability-based auto-dispatch was reverted (round-5 ADVICE item
-    1): an environment gaining protobuf would silently switch
-    production ops onto a path whose parity tests have never executed
-    in CI (they skip without protobuf). Flip the defaults only after
-    tests/test_streaming.py's TWS parity tests have run green in a
-    protobuf-enabled job."""
-    try:
-        import google.protobuf  # noqa: F401
-        from pyspark.sql.streaming.stateful_processor import (  # noqa: F401
-            StatefulProcessor,
-        )
-    except Exception:  # noqa: BLE001 — any import failure → unavailable
-        return False
-    return True
-
-
-class ExperimentalUnverifiedError(RuntimeError):
-    """Raised when an EXPERIMENTAL code path is requested in an
-    environment where its verification tests cannot run."""
-
-
-def _require_tws() -> None:
-    """EXPERIMENTAL-PATH FENCE for the `use_tws=True` branches.
-
-    The transformWithStateInPandas processors below have never executed
-    in this build environment (their Python worker needs
-    `google.protobuf`, absent here), so the branch is explicitly
-    quarantined (round-6 VERDICT item 2): requesting it where the
-    parity tests cannot run raises loudly instead of launching a
-    never-verified stateful job. In a protobuf-enabled deployment the
-    fence passes and tests/test_streaming.py's forced-on parity test
-    runs the path green first — keep it EXPERIMENTAL until that has
-    happened in your CI."""
-    if not transform_with_state_available():
-        raise ExperimentalUnverifiedError(
-            "use_tws=True requests the EXPERIMENTAL transformWithState "
-            "path, whose parity tests cannot run in this environment "
-            "(google.protobuf is not importable). Use the default "
-            "applyInPandasWithState path, or run in a protobuf-enabled "
-            "environment where tests/test_streaming.py's TWS parity "
-            "test passes first."
-        )
-
-
-def _make_hwm_processor():
-    """StatefulProcessor (transformWithState ValueState) sharing
-    `_fold_hwm` with the applyInPandasWithState path — same
-    init/fold/emit split, successor API."""
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    class _Hwm(StatefulProcessor):  # pragma: no cover — needs protobuf
-        def init(self, handle) -> None:
-            self._st = handle.getValueState("hwm", "maxv double, cnt long")
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            maxv, cnt = (self._st.get() or (None, 0)) if self._st.exists() else (None, 0)
-            maxv, cnt = _fold_hwm(maxv, cnt, rows)
-            self._st.update((maxv, cnt))
-            yield pd.DataFrame({"user_id": [key[0]], "n_records": [cnt]})
-
-        def close(self) -> None:
-            pass
-
-    return _Hwm()
-
-
-def _make_anomaly_processor():
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    class _Anomaly(StatefulProcessor):  # pragma: no cover — needs protobuf
-        def init(self, handle) -> None:
-            self._st = handle.getValueState(
-                "moments", "n long, s1 long, s2 long, flagged long"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            n, s1, s2, flagged = (
-                self._st.get() if self._st.exists() else (0, 0, 0, 0)
-            )
-            n, s1, s2, flagged = _fold_anomaly(n, s1, s2, flagged, rows)
-            self._st.update((n, s1, s2, flagged))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "n_flagged": [flagged]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return _Anomaly()
-
-
-def _make_topk_processor():
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    class _TopK(StatefulProcessor):  # pragma: no cover — needs protobuf
-        def init(self, handle) -> None:
-            self._st = handle.getValueState("topk", "t1 long, t2 long, t3 long")
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            best = []
-            if self._st.exists():
-                best = [v for v in self._st.get() if v is not None]
-            padded = _fold_topk(best, rows)
-            self._st.update(tuple(padded))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "top1": [padded[0]],
-                    "top2": [padded[1]],
-                    "top3": [padded[2]],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return _TopK()
-
-
-def stream_high_water_marks(
-    events: DataFrame, use_tws: bool = False
-) -> DataFrame:
+def stream_high_water_marks(events: DataFrame) -> DataFrame:
     """CUSTOM stateful operator: per-user record-setting event counts —
     state a native windowed agg can't hold (an order-dependent running
     max + counter). Batch twin: `event_hwm` (functions/sessions.py),
     oracle-checked; parity tested with the availableNow trigger.
-
-    Runs on `applyInPandasWithState` by default; `use_tws=True` opts
-    into `transformWithStateInPandas` (ValueState — same fold
-    `_fold_hwm`, same output) where the environment supports it
-    (`transform_with_state_available`). Opt-in, not auto: the TWS
-    parity tests skip without protobuf, so availability alone must not
-    select a never-verified path (round-5 ADVICE item 1).
 
     Scale notes: state is two scalars per user key, sharded across
     shuffle partitions like any keyed state; within a micro-batch the
     group's rows arrive as Arrow batches, sorted here by (ts, event_id)
     for deterministic tie-breaks.
     """
-    if use_tws:
-        _require_tws()  # EXPERIMENTAL: see the fence docstring
-        return events.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=_make_hwm_processor(),
-            outputStructType="user_id long, n_records long",
-            outputMode="Update",
-            timeMode="None",
-        )
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     return events.groupBy("user_id").applyInPandasWithState(
@@ -342,10 +192,10 @@ def stream_high_water_marks(
 
 
 def _fold_anomaly(n, s1, s2, flagged, pdfs):  # pragma: no cover — worker
-    """Shared prequential anomaly fold — test each purchase against the
+    """Prequential anomaly fold — test each purchase against the
     moments of STRICTLY PRIOR purchases (the rearranged
     (x−mean)² > 4·var z-test: no sqrt, no zero-std division). Sorts the
-    group's chunks once by (ts, event_id); used by BOTH stateful APIs."""
+    group's chunks once by (ts, event_id)."""
     import math
     import pandas as pd  # local import: executes in the Python worker
 
@@ -381,16 +231,12 @@ def _anomaly_update(key, pdfs, state):  # pragma: no cover — runs in worker
     )
 
 
-def stream_anomaly_counts(
-    events: DataFrame, use_tws: bool = False
-) -> DataFrame:
+def stream_anomaly_counts(events: DataFrame) -> DataFrame:
     """CUSTOM stateful operator #2: online per-user anomaly counts with
     prequential (never-look-ahead) semantics — exactly the fold the
     oracle-checked batch twin `event_anomaly_run`
     (functions/sessions.py) expresses with an exclusive-frame running
-    window; parity tested with availableNow. `use_tws=True` opts into
-    `transformWithStateInPandas` (same `_fold_anomaly`); default stays
-    on the verified applyInPandasWithState path (round-5 ADVICE 1).
+    window; parity tested with availableNow.
 
     Scale notes: state is four integers per user key (the mergeable
     moments of `agg_stats`), sharded across shuffle partitions; the
@@ -398,14 +244,6 @@ def stream_anomaly_counts(
     evaluates, so the counts agree exactly.
     """
     purchases = events.filter(F.col("event_type") == "purchase")
-    if use_tws:
-        _require_tws()  # EXPERIMENTAL: see the fence docstring
-        return purchases.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=_make_anomaly_processor(),
-            outputStructType="user_id long, n_events long, n_flagged long",
-            outputMode="Update",
-            timeMode="None",
-        )
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     return purchases.groupBy("user_id").applyInPandasWithState(
@@ -418,7 +256,7 @@ def stream_anomaly_counts(
 
 
 def _fold_topk(best, pdfs):  # pragma: no cover — runs in worker
-    """Shared top-3 fold (scaled cents). The top-3 MULTISET is
+    """Top-3 fold (scaled cents). The top-3 MULTISET is
     order-insensitive, so the state converges to the batch twin from
     ANY micro-batch arrival order — no sorting of the batch needed."""
     import math
@@ -451,32 +289,15 @@ def _topk_update(key, pdfs, state):  # pragma: no cover — runs in worker
     )
 
 
-def stream_running_topk(
-    events: DataFrame, use_tws: bool = False
-) -> DataFrame:
+def stream_running_topk(events: DataFrame) -> DataFrame:
     """CUSTOM stateful operator #3: each user's running top-3 purchase
     values (scaled cents) as three longs of keyed state. Unlike the
     running-max and running-moments operators, this state is
     ORDER-INSENSITIVE (a multiset of maxima), so the parity test drains
     an UNORDERED fixture on purpose and still matches the
     oracle-checked batch twin `event_topk_run` exactly.
-
-    `use_tws=True` opts into Spark 4's successor API
-    (`transformWithStateInPandas` ValueState — same init/fold/emit
-    split, same `_fold_topk`) where the environment has
-    `google.protobuf`; the default stays on the universally available,
-    CI-verified `applyInPandasWithState` (round-5 ADVICE item 1: never
-    auto-select a path whose parity tests have not executed).
     """
     purchases = events.filter(F.col("event_type") == "purchase")
-    if use_tws:
-        _require_tws()  # EXPERIMENTAL: see the fence docstring
-        return purchases.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=_make_topk_processor(),
-            outputStructType="user_id long, top1 long, top2 long, top3 long",
-            outputMode="Update",
-            timeMode="None",
-        )
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     return purchases.groupBy("user_id").applyInPandasWithState(

@@ -617,7 +617,7 @@ def _profile_r12_stages(spark, sf_dir):
 
     from piper_spark.functions.dedup import (
         SHINGLE_SIZE,
-        _simhash64_pairs,
+        _simhash_pairs,
         _winnow_verified_pairs,
         dedup_containment,
         dedup_ensemble,
@@ -661,7 +661,7 @@ def _profile_r12_stages(spark, sf_dir):
         _noop(spine[key])
     t_sigs = time.perf_counter() - t0
     t_mh = timed(lsh_candidate_pairs(mh_sigs).select("id1", "id2"))
-    t_sh = timed(_simhash64_pairs(sim_sigs).select("id1", "id2"))
+    t_sh = timed(_simhash_pairs(sim_sigs, ["sh"]).select("id1", "id2"))
     wn_caches = []
     t_wn = timed(_winnow_verified_pairs(docs, fps, caches=wn_caches))
     for c in [fps, mh_sigs, sim_sigs, spine["stage"], *wn_caches]:

@@ -129,12 +129,6 @@ def test_tpch_q18_having_subquery_is_semi_join(spark):
     assert "TakeOrderedAndProject" in plan  # top-100 without global sort
 
 
-def test_minhash_join_is_equi_join_on_band_hash(spark):
-    plan = plan_of(spark, "dedup_minhash")
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
 def test_join_bucket_has_no_join_side_exchange(spark):
     """Bucketed tables joined on their bucket key must sort-merge with
     ZERO Exchange under the join — the only shuffle allowed in the plan
@@ -148,15 +142,6 @@ def test_join_bucket_has_no_join_side_exchange(spark):
     keys = re.findall(r"Exchange hashpartitioning\((\w+)", plan)
     assert all(k.startswith("c_mktsegment") for k in keys), keys
     assert "SelectedBucketsCount" in plan  # bucketed scan engaged
-
-
-def test_lsh_cosine_candidates_come_from_equi_join(spark):
-    """dedup_lsh_cosine proposes pairs via a (band_id, band_val)
-    equi-join — never an all-pairs comparison. The only permissible
-    BNLJ in the ANN twin is the broadcast of the 1-row query vector."""
-    plan = plan_of(spark, "dedup_lsh_cosine")
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
 
 
 @pytest.mark.parametrize("name", ["agg_group", "proj_math", "clamp_scale", "text_normalize"])
@@ -320,17 +305,6 @@ def test_ts_interp_windows_run_over_bounded_calendar(spark):
     assert "Window" in plan and "explode" in plan.lower()
 
 
-def test_img_phash_candidates_come_from_equi_join(spark):
-    """Perceptual-hash near-dup candidates must come from the banded
-    equi-join, never an all-pairs comparison; the Hamming verify is a
-    codegen'd bit_count, not a per-row string round-trip."""
-    plan = plan_of(spark, "img_phash")
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "bit_count" in plan
-    assert "regexp" not in plan.lower()
-
-
 def test_score_eval_scores_exactly_once(spark):
     """The pipeline evaluation form must contain exactly ONE scoring
     pass (one MapInPandas matmul) feeding both the confusion counts and
@@ -391,14 +365,6 @@ def test_audio_fingerprint_spreads_then_stays_jvm_side(spark):
     assert "MapInPandas" not in plan and "BatchEvalPython" not in plan
     assert "hashpartitioning" not in plan.lower(), plan
     assert len(re.findall(r"(?i)Exchange roundrobinpartitioning", plan)) == 1, plan
-
-
-def test_dedup_audio_band_join_is_equi_join(spark):
-    """Audio near-dup candidates come from the band equi-join — never
-    a cartesian — and the Hamming verify stays JVM-side."""
-    plan = plan_of(spark, "dedup_audio")
-    assert "Cartesian" not in plan and "BroadcastNestedLoop" not in plan
-    assert "MapInPandas" not in plan and "BatchEvalPython" not in plan
 
 
 def test_text_lm_score_joins_model_once(spark):
@@ -519,16 +485,6 @@ def test_video_fingerprint_is_shuffle_free_codegen(spark):
 
     exchanges = re.findall(r"Exchange (\w+)", plan)
     assert all(e.startswith("RoundRobin") for e in exchanges), exchanges
-
-
-def test_dedup_video_band_join_is_equi_join(spark):
-    """Video near-dup candidates come from the opening-frame-hash
-    equi-join over the persisted signature relation — never cartesian,
-    and the verify math stays JVM-side."""
-    plan = plan_of(spark, "dedup_video")
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
 def test_near_incremental_probes_index_not_all_pairs(spark):
@@ -784,16 +740,6 @@ def test_ts_ohlc_is_one_partial_agg_shuffle(spark):
     assert "Join" not in plan
 
 
-def test_pipeline_audio_curate_reuses_persisted_fingerprints(spark):
-    # The fingerprint relation feeds the band self-join (both aliases)
-    # and the survivor anti-join from the SAME persisted cache; no
-    # cartesian anywhere; the pipeline stays Arrow/codegen-side.
-    plan = plan_of(spark, "pipeline_audio_curate")
-    assert "InMemoryTableScan" in plan
-    assert "CartesianProduct" not in plan
-    assert plan.count("LeftAnti") == 1
-
-
 def test_join_interval_is_bucket_equi_join_not_bnlj(spark):
     # The exact overlap predicate runs ABOVE a week-bucket equi-join;
     # Catalyst's native plan for the raw range predicate would be a
@@ -998,3 +944,101 @@ def test_dedup_ensemble_votes_without_cartesian(spark):
     plan = plan_of(spark, "dedup_ensemble")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+#: Every caller of the banded self-join kernel (`lsh.banded_pairs`):
+#: the registered keys that reach it, plus `pipelines.dedup_near_docs`
+#: called directly. Values: plan fragments (lower-cased) the case must
+#: not / must contain, and exact node counts, beyond the common checks.
+BANDED_CALLERS = {
+    "dedup_minhash": {},
+    "dedup_simhash": {},
+    "dedup_simhash128": {},
+    "dedup_ensemble": {},
+    "dedup_lsh_cosine": {},
+    "pipeline_embed_curate": {},
+    # Hamming verify is a codegen'd bit_count, not a string round-trip.
+    "img_phash": {"present": ["bit_count"], "absent": ["regexp"]},
+    "pipeline_image_curate": {},
+    "dedup_phash_int": {},
+    # Audio and video verify math stays JVM-side.
+    "dedup_audio": {"absent": ["mapinpandas"]},
+    "dedup_video": {"absent": ["arrowevalpython"]},
+    # The survivor anti-join reads the same persisted fingerprints.
+    "pipeline_audio_curate": {"counts": {"LeftAnti": 1}},
+    "pipeline_video_curate": {},
+    "dedup_near_docs": {},
+}
+
+_JOINS = ("BroadcastHashJoin", "ShuffledHashJoin", "SortMergeJoin")
+_PY_NODES = ("ArrowEvalPython", "MapInPandas")
+
+
+def _children(node):
+    if node.nodeName() == "AdaptiveSparkPlan":
+        return [node.inputPlan()]
+    if node.nodeName() == "ReusedExchange":
+        return [node.child()]
+    ch = node.children()
+    return [ch.apply(i) for i in range(ch.size())]
+
+
+def _nodes(node, into_cache: bool):
+    """Every node under `node`; with `into_cache`, also the plans that
+    fill the InMemoryRelations it scans."""
+    yield node
+    kids = _children(node)
+    if into_cache and node.nodeName() == "InMemoryTableScan":
+        kids.append(node.relation().cachedPlan())
+    for k in kids:
+        yield from _nodes(k, into_cache)
+
+
+@pytest.mark.parametrize("name", list(BANDED_CALLERS))
+def test_banded_pairs_callers_join_on_band_over_persisted_signatures(spark, name):
+    """Each kernel caller proposes candidates from an equi-join on the
+    band value, never all pairs; both join sides read the signature
+    relation through the same InMemoryTableScan; and the Python pass
+    that builds the signatures runs once, not once per side."""
+    spark.catalog.clearCache()
+    if name == "dedup_near_docs":
+        from piper_spark.pipelines import dedup_near_docs
+        from piper_spark.session import table
+
+        df = dedup_near_docs(table(spark, SF_SMOKE, "documents"))
+    else:
+        df = registry.all_queries()[name](spark, SF_SMOKE)
+    root = df._jdf.queryExecution().executedPlan()
+    plan = root.toString()
+    ident = spark._jvm.System.identityHashCode
+
+    for frag in ("Cartesian", "BroadcastNestedLoop", "BatchEvalPython"):
+        assert frag not in plan, frag
+    extra = BANDED_CALLERS[name]
+    for frag in extra.get("absent", []):
+        assert frag not in plan.lower(), frag
+    for frag in extra.get("present", []):
+        assert frag in plan.lower(), frag
+    for frag, n in extra.get("counts", {}).items():
+        assert plan.count(frag) == n, frag
+
+    band_joins = []
+    for node in _nodes(root, into_cache=True):
+        if node.nodeName() in _JOINS:
+            keys = node.leftKeys()
+            if any(keys.apply(i).toString().startswith("band")
+                   for i in range(keys.size())):
+                band_joins.append(node)
+    assert band_joins, "no equi-join on a band column"
+    for join in band_joins:
+        left, right = _children(join)
+        scans = [
+            {ident(n.relation().cacheBuilder())
+             for n in _nodes(side, into_cache=False)
+             if n.nodeName() == "InMemoryTableScan"}
+            for side in (left, right)
+        ]
+        assert scans[0] & scans[1], "join sides do not share a persisted relation"
+        py = {ident(n) for n in _nodes(join, into_cache=True)
+              if n.nodeName() in _PY_NODES}
+        assert len(py) <= 1, f"{len(py)} signature Python passes"

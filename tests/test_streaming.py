@@ -366,92 +366,21 @@ def test_stream_rate_source_soak_live_triggers(spark):
     assert full, f"no complete 1-second window observed: {per_sec}"
 
 
-def test_stateful_ops_dispatch_on_tws_availability(spark, events_dir):
-    """The three custom stateful ops must build the applyInPandasWithState
-    plan when transformWithState is unavailable (and the TWS plan
-    otherwise) — the dispatch itself is exercised regardless of env."""
+def test_stateful_ops_build_apply_in_pandas_with_state_plan(spark, events_dir):
+    """The three custom stateful ops build the applyInPandasWithState
+    plan (FlatMapGroupsInPandasWithState)."""
     from piper_spark.streaming.events import (
         stream_anomaly_counts,
         stream_running_topk,
-        transform_with_state_available,
     )
 
     stream = read_event_stream(spark, events_dir)
     for op in (stream_high_water_marks, stream_anomaly_counts, stream_running_topk):
-        df = op(stream, use_tws=False)
+        df = op(stream)
         assert (
             "FlatMapGroupsInPandasWithState"
             in df._jdf.queryExecution().logical().toString()
         )
-    if not transform_with_state_available():
-        # protobuf absent: forcing TWS must fail at import, proving the
-        # gate tests the real dependency, not a guess.
-        with pytest.raises(Exception):
-            import google.protobuf  # noqa: F401
-
-
-def test_stream_tws_fence_blocks_unverified_path(spark, events_dir):
-    """The EXPERIMENTAL transformWithState branch is explicitly fenced
-    (round-6 VERDICT item 2): in an environment where its parity tests
-    cannot run (no google.protobuf), every `use_tws=True` entry point
-    must raise ExperimentalUnverifiedError BEFORE building a plan — the
-    dormant path cannot be reached silently. In a protobuf-enabled
-    environment the fence passes and the parity test below carries the
-    verification burden instead."""
-    from piper_spark.streaming.events import (
-        ExperimentalUnverifiedError,
-        stream_anomaly_counts,
-        stream_running_topk,
-        transform_with_state_available,
-    )
-
-    if transform_with_state_available():
-        pytest.xfail("protobuf present: the fence is open by design here")
-    stream = read_event_stream(spark, events_dir)
-    for op in (stream_high_water_marks, stream_anomaly_counts, stream_running_topk):
-        with pytest.raises(ExperimentalUnverifiedError, match="EXPERIMENTAL"):
-            op(stream, use_tws=True)
-
-
-def test_stream_running_topk_tws_matches_batch(spark, events_dir):
-    """ValueState (transformWithStateInPandas) path: drain the unordered
-    fixture and match the oracle-checked batch twin — identical harness
-    to the applyInPandasWithState parity test, TWS forced on. Where the
-    environment cannot run TWS (no protobuf), assert the experimental
-    fence fires instead — the test always executes a real code path, so
-    pytest shows no skips (round-6 VERDICT item 2)."""
-    from piper_spark.functions.sessions import event_topk_run
-    from piper_spark.streaming.events import (
-        ExperimentalUnverifiedError,
-        stream_running_topk,
-        transform_with_state_available,
-    )
-
-    stream = read_event_stream(spark, events_dir, max_files_per_trigger=1)
-    if not transform_with_state_available():
-        with pytest.raises(ExperimentalUnverifiedError, match="protobuf"):
-            stream_running_topk(stream, use_tws=True)
-        return
-    run_available_now(
-        stream_running_topk(stream, use_tws=True), "topk_tws_out",
-        output_mode="update",
-    )
-    got = {
-        r.user_id: (r.top1, r.top2, r.top3)
-        for r in spark.table("topk_tws_out")
-        .groupBy("user_id")
-        .agg(
-            F.max("top1").alias("top1"),
-            F.max("top2").alias("top2"),
-            F.max("top3").alias("top3"),
-        )
-        .collect()
-    }
-    want = {
-        r.user_id: (r.top1, r.top2, r.top3)
-        for r in event_topk_run(spark, SF_SMOKE).collect()
-    }
-    assert got == want
 
 
 def test_stream_countmin_matches_batch_counters_and_estimates(spark):
