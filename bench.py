@@ -2,13 +2,17 @@
 
 Prints TWO JSON lines (truncation-proof for tail-capture harnesses):
   line 1 (detail): {"metric": "...", "value": <total sec>, "unit": "sec",
-                    "queries": {"q": sec, ...}, "sf": <sf>}
+                    "queries": {"q": sec, ...}, "sf": <sf>,
+                    "failed": [q, ...]}
   line 2 (compact, printed LAST so a tail capture always retains it):
                    {"metric": "...", "value": <total sec>, "unit": "sec",
                     "sf": <sf>, "n_queries": N, "queries_file":
-                    "BENCH_DETAIL.json", "slowest": {top 5}}
+                    "BENCH_DETAIL.json", "slowest": {top 5},
+                    "failed": [q, ...]}
 The full per-query map is also written to BENCH_DETAIL.json next to this
 script, so the headline total survives even if stdout is clipped.
+A query that raises is named with its error on stderr, listed under
+"failed" and left out of "queries" and the total; the run carries on.
 
 Each query is executed end-to-end into a noop sink (full compute, no
 driver-side materialization cost). A tiny warm-up query absorbs JVM/
@@ -28,8 +32,77 @@ from piper_spark import registry
 from piper_spark.session import get_spark
 
 
+METRIC = "total wall-clock for all registered queries, noop sink"
+
+
 def run_to_noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
+
+
+def _report_failure(phase: str, name: str, err: Exception) -> None:
+    first = (str(err).strip().splitlines() or [""])[0][:300]
+    print(f"bench: {phase} {name} failed: {type(err).__name__}: {first}", file=sys.stderr)
+
+
+def warm_up(spark, queries, warm_dir: str) -> None:
+    """Run every query once at the smallest SF. Generated code is
+    identical modulo literals/paths, so Spark's codegen cache + Python
+    workers are hot and the timed runs measure steady-state throughput,
+    not JIT/compile latency. A failing key is named on stderr."""
+    for name, fn in sorted(queries.items()):
+        try:
+            run_to_noop(fn(spark, warm_dir))
+        except Exception as e:  # noqa: BLE001 — one key must not stop the bench
+            _report_failure("warm-up", name, e)
+
+
+def timed_pass(
+    spark, queries, sf_dir: str, reverse: bool, failed: set[str]
+) -> dict[str, float]:
+    """One timed pass in key order (reversed on request). A key that
+    raises is named on stderr, added to `failed` and left out of the
+    returned timings; the pass carries on."""
+    t: dict[str, float] = {}
+    for name, fn in sorted(queries.items(), reverse=reverse):
+        t0 = time.perf_counter()
+        try:
+            run_to_noop(fn(spark, sf_dir))
+            t[name] = round(time.perf_counter() - t0, 3)
+        except Exception as e:  # noqa: BLE001 — one key must not stop the bench
+            _report_failure("timed", name, e)
+            failed.add(name)
+        spark.catalog.clearCache()
+    return t
+
+
+def summary_lines(
+    timings: dict[str, float], failed: set[str], sf, calib_sec: float
+) -> tuple[dict, dict]:
+    """The detail line (also written to BENCH_DETAIL.json) and the
+    compact line; both list the failed keys under "failed"."""
+    total = round(sum(timings.values()), 3)
+    detail = {
+        "metric": METRIC,
+        "value": total,
+        "unit": "sec",
+        "queries": timings,
+        "sf": sf,
+        "calib_sec": calib_sec,
+        "failed": sorted(failed),
+    }
+    slowest = dict(sorted(timings.items(), key=lambda kv: kv[1], reverse=True)[:5])
+    compact = {
+        "metric": METRIC,
+        "value": total,
+        "unit": "sec",
+        "sf": sf,
+        "n_queries": len(timings),
+        "queries_file": "BENCH_DETAIL.json",
+        "calib_sec": calib_sec,
+        "slowest": slowest,
+        "failed": sorted(failed),
+    }
+    return detail, compact
 
 
 def main() -> None:
@@ -40,16 +113,8 @@ def main() -> None:
 
     queries = registry.all_queries()
 
-    # Warm-up: run every query once at the smallest SF. Generated code is
-    # identical modulo literals/paths, so Spark's codegen cache + Python
-    # workers are hot and the timed runs below measure steady-state
-    # throughput, not JIT/compile latency.
     warm_dir = "/root/testdata/sf0.001"
-    for name, fn in sorted(queries.items()):
-        try:
-            run_to_noop(fn(spark, warm_dir))
-        except Exception:  # noqa: BLE001 — warm-up must never fail the bench
-            pass
+    warm_up(spark, queries, warm_dir)
 
     # Drop warm-up leftovers (persisted LSH signatures / codebooks) so
     # timed queries don't inherit cache/GC pressure from one another.
@@ -69,23 +134,11 @@ def main() -> None:
     run_to_noop(calib_df)
     calib_sec = round(time.perf_counter() - t0, 3)
 
-    def timed_pass(reverse: bool) -> dict[str, float]:
-        ordered = sorted(queries.items())
-        if reverse:
-            ordered.reverse()
-        t: dict[str, float] = {}
-        for name, fn in ordered:
-            t0 = time.perf_counter()
-            run_to_noop(fn(spark, sf_dir))
-            t[name] = round(time.perf_counter() - t0, 3)
-            spark.catalog.clearCache()
-        return t
-
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
 
     def pin_payload(t: dict[str, float], order: str) -> dict:
         return {
-            "metric": "total wall-clock for all registered queries, noop sink",
+            "metric": METRIC,
             "value": round(sum(t.values()), 3),
             "unit": "sec",
             "queries": t,
@@ -109,10 +162,11 @@ def main() -> None:
     # single pass (the old manual two-invocation dance).
     pins_tag = os.environ.get("SPARK_GRAFT_BENCH_PINS")
     here = os.path.dirname(os.path.abspath(__file__))
+    failed: set[str] = set()
     if pins_tag:
-        timings = timed_pass(reverse=False)
-        rev = timed_pass(reverse=True)
-        fwd2 = timed_pass(reverse=False)
+        timings = timed_pass(spark, queries, sf_dir, False, failed)
+        rev = timed_pass(spark, queries, sf_dir, True, failed)
+        fwd2 = timed_pass(spark, queries, sf_dir, False, failed)
         for run, t, order in (
             (1, timings, "forward"),
             (2, rev, "reverse"),
@@ -124,19 +178,11 @@ def main() -> None:
                 json.dump(pin_payload(t, order), fh, indent=1)
                 fh.write("\n")
     else:
-        timings = timed_pass(
-            os.environ.get("SPARK_GRAFT_BENCH_ORDER") == "reverse"
-        )
+        reverse = os.environ.get("SPARK_GRAFT_BENCH_ORDER") == "reverse"
+        timings = timed_pass(spark, queries, sf_dir, reverse, failed)
 
-    total = round(sum(timings.values()), 3)
-    detail = {
-        "metric": "total wall-clock for all registered queries, noop sink",
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "sf": sf_val,
-        "calib_sec": calib_sec,
-    }
+    detail, compact = summary_lines(timings, failed, sf_val, calib_sec)
+    total = detail["value"]
     # Durable copy of the per-query map, immune to stdout clipping.
     detail_path = os.path.join(here, "BENCH_DETAIL.json")
     try:
@@ -148,23 +194,7 @@ def main() -> None:
     print(json.dumps(detail))
     # Compact summary: a tail capture that truncates the long detail
     # line above still retains this whole (~300 B) parseable line.
-    slowest = dict(
-        sorted(timings.items(), key=lambda kv: kv[1], reverse=True)[:5]
-    )
-    print(
-        json.dumps(
-            {
-                "metric": "total wall-clock for all registered queries, noop sink",
-                "value": total,
-                "unit": "sec",
-                "sf": sf_val,
-                "n_queries": len(timings),
-                "queries_file": "BENCH_DETAIL.json",
-                "calib_sec": calib_sec,
-                "slowest": slowest,
-            }
-        )
-    )
+    print(json.dumps(compact))
     # Round 15 (VERDICT item 2 — measurement fix, no timing change):
     # the driver's capture keeps only a ~2000-char TAIL of stdout and
     # parses the last JSON line(s), so the full per-query map — which
@@ -187,9 +217,7 @@ def main() -> None:
         print(
             json.dumps(
                 {
-                    "metric": (
-                        "total wall-clock for all registered queries, noop sink"
-                    ),
+                    "metric": METRIC,
                     "value": total,
                     "unit": "sec",
                     "sf": sf_val,

@@ -42,7 +42,7 @@ from piper_spark.functions.numeric import (
     pack_u32_pair_sql,
     with_fmix32,
 )
-from piper_spark.functions.graphs import plan_truncate
+from piper_spark.functions.graphs import connected_components
 from piper_spark.registry import register
 from piper_spark.session import eager_fill, fan_out, table
 
@@ -214,78 +214,6 @@ def dedup_jaccard_shingle(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(jac, 4).alias("jaccard"),
         )
     )
-
-
-def connected_components(
-    edges: DataFrame, vertices: DataFrame, max_iters: int = 20
-) -> DataFrame:
-    """Connected components by iterative min-label propagation.
-
-    vertices: (id long); edges: (u, v) one row per DIRECTED edge (pass
-    both directions for an undirected graph). Returns (id, component)
-    where component = min id reachable. Each iteration is one shuffle
-    (join on the edge key) + one aggregate; iterations needed = graph
-    diameter. Labels are persisted and the previous generation
-    unpersisted every round, so lineage stays one-iteration deep — the
-    standard large-graph shape (this is how dedup groups are built from
-    LSH candidate pairs at corpus scale).
-    """
-    # Round-12: TRUNCATE the input plan (localCheckpoint), don't just
-    # cache it. Caching bounds the VALUES, but every propagation round
-    # re-embeds the full upstream candidate-generation lineage in the
-    # round's analyzed plan (neigh_min joins edges each round), so
-    # driver-side re-analysis grows with input-plan size × rounds —
-    # with the winnow verify's candidate-bounded subtree that analysis
-    # dominated the loop (measured: 8.5 s of a 10.4 s
-    # pipeline_near_dedup; 1.2 s after the restart). The LogicalRDD
-    # restart is the graphs.py _GenerationCaches.truncate rationale
-    # applied to the INPUT; its blocks are freed by the ContextCleaner
-    # once the DataFrame is unreachable (no unpersist needed).
-    # Round-13 (ADVICE 5): `plan_truncate` picks reliable checkpoint()
-    # over localCheckpoint when a checkpoint dir is configured, so the
-    # cluster deployment survives executor loss mid-loop.
-    edges = plan_truncate(edges)
-    labels = vertices.select(F.col("id"), F.col("id").alias("component")).persist()
-    # Labels only ever DECREASE, so Σcomponent is strictly monotone while
-    # anything changes — one cheap aggregate per round replaces a
-    # join-and-compare convergence check.
-    prev_sum = labels.agg(F.sum("component")).collect()[0][0]
-    converged = False
-    for _ in range(max_iters):
-        neigh_min = (
-            edges.join(labels, edges["v"] == labels["id"])
-            .groupBy("u")
-            .agg(F.min("component").alias("nmin"))
-        )
-        new_labels = (
-            labels.join(neigh_min, labels["id"] == neigh_min["u"], "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("component"), F.coalesce(F.col("nmin"), F.col("component"))
-                ).alias("component"),
-            )
-            .persist()
-        )
-        cur_sum = new_labels.agg(F.sum("component")).collect()[0][0]
-        labels.unpersist()
-        labels = new_labels
-        if cur_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = cur_sum
-    if not converged:
-        # Silent unconvergence would hand back WRONG component labels
-        # (multiple labels inside one true component) and dedup would keep
-        # extra near-dup docs with no error signal. Each round is one
-        # bounded shuffle, so callers should raise max_iters rather than
-        # tolerate a truncated fixpoint.
-        raise RuntimeError(
-            f"connected_components did not converge within {max_iters} "
-            "iterations (graph diameter exceeds max_iters); labels would "
-            "be incorrect — increase max_iters"
-        )
-    return labels
 
 
 @register(

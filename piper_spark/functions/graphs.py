@@ -1,6 +1,6 @@
 """Graph operators: PageRank, triangle counting, neighbor-set link
 prediction — the iterative/structural family the engine's dedup
-clustering (functions/dedup.py connected_components) already borders
+clustering (`connected_components`, at the end of this module) borders
 on, promoted to first-class graph analytics.
 
 The corpus carries no explicit link column, so a deterministic link
@@ -20,14 +20,14 @@ far inside int64.
 
 Scale shape notes live on each operator; the common principle: every
 stage is a keyed equi-join or keyed aggregate on (src|dst|node), never
-all-pairs, and iteration state (ranks, labels) is persisted per round
-with the previous generation unpersisted, so lineage stays
-one-iteration deep (the connected_components discipline).
+all-pairs, and every iterative algorithm, `connected_components`
+included, runs its rounds through one generation loop, `iterate`,
+which owns persistence, plan truncation and release.
 """
 
 from __future__ import annotations
 
-import gc as _pygc
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -44,19 +44,13 @@ from piper_spark.session import eager_fill, row_count, table
 PR_SCALE = 1_000_000_000_000
 PR_ITERS = 3
 
-#: Checkpoint interval for the iterative graph ops — the Pregel /
-#: GraphX checkpointInterval idea: generations are persisted LAZILY
-#: every round (so double-consumer steps like k-core's two endpoint
-#: joins read ONE shared InMemoryRelation — the cache manager keys on
-#: the canonicalized plan, so both scans share a single RDD and each
-#: generation evaluates exactly once per job), but an eager
-#: materializing action runs only every Nth round and on the final
-#: one.  Round-9 paid one scheduling round trip PER GENERATION (the
-#: honest fix for the lazy-persist bug); this keeps the honesty —
-#: every pending cache fills during the checkpoint job, lineage is
-#: bounded at N rounds for executor-loss recovery — at 1/N of the
-#: materialization tax (round-9 VERDICT item 4).  At most N node-sized
-#: generations are cached at once.
+#: Plan-truncation interval of `iterate` — the Pregel / GraphX
+#: checkpointInterval idea: every Nth round the generation is
+#: materialized into a LogicalRDD restart (`plan_truncate`), so the
+#: analyzed plan — which doubles per round when the step reads its
+#: generation twice — stays bounded at N rounds of lineage, and so
+#: does recompute after an executor loss.  Re-measured at 3/5/8 with
+#: flat totals (`AB_CKPT_r15.json`).
 PREGEL_CKPT_INTERVAL = 5
 
 
@@ -78,7 +72,13 @@ def plan_truncate(df: DataFrame) -> DataFrame:
     without that conf, per-round checkpoints from the iterative
     callers ACCUMULATE for the directory's lifetime, so electing the
     reliable flavor on such a session logs a one-time warning
-    (round-13 ADVICE 3)."""
+    (round-13 ADVICE 3).  A no-op coalesce gives the restart unknown
+    partitioning: one that keeps a hash partitioning does not match its
+    re-instanced copy across a self-join, so a generation built on it
+    would be cached for one reader and recomputed for the other."""
+    n = df._jdf.queryExecution().executedPlan().outputPartitioning().numPartitions()
+    if n > 0:
+        df = df.coalesce(n)
     sc = df.sparkSession.sparkContext
     if sc.getCheckpointDir() is not None:
         conf = "spark.cleaner.referenceTracking.cleanCheckpoints"
@@ -99,58 +99,101 @@ def plan_truncate(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
-class _GenerationCaches:
-    """Cache bookkeeping for generation-iterating algorithms: `add`
-    persists a new generation lazily; `checkpoint` runs the eager
-    count (filling every pending generation's cache in one job) and
-    releases everything older.  The final generation always stays
-    cached — caller-owned lifetime, the repo convention."""
+def release_checkpoint(df: DataFrame) -> None:
+    """Free the blocks of a `plan_truncate` result.  `DataFrame.
+    unpersist()` and `clearCache()` do not reach them (they are an
+    RDD's, not the cache manager's); unpersisting the LogicalRDD's RDD
+    does.  A no-op for reliable checkpoints, whose files the
+    ContextCleaner owns."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
-    def __init__(self) -> None:
-        self._pending: list[DataFrame] = []
 
-    def add(self, df: DataFrame) -> DataFrame:
-        df.persist()
-        self._pending.append(df)
+def iterate(
+    gen: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    rounds: int,
+    *,
+    readers: int = 1,
+    converged: Callable[[DataFrame, DataFrame], bool] | None = None,
+    start: int = 0,
+) -> DataFrame:
+    """The one generation loop: ``gen = step(gen)`` for rounds
+    ``start + 1 .. rounds``, where `gen` is generation ``start`` and
+    `step` builds the next generation lazily.  Returns the final
+    generation, persisted and filled; its lifetime is the caller's.
+
+    - With ``readers > 1`` (the step reads its generation twice) every
+      generation, the first included unless already cached, is
+      persisted lazily, so both readers scan one InMemoryRelation.
+    - Every PREGEL_CKPT_INTERVAL-th round but the last, the generation
+      goes through `plan_truncate`, so the analyzed plan never holds
+      more than that many rounds of lineage.
+    - Fixed rounds (``converged=None``): one ``count()`` fills the
+      final generation; the truncations fill pending caches on the way.
+    - Fixpoint: every generation is persisted lazily and the one job
+      of ``converged(prev, new)`` fills it; the loop stops when the
+      predicate holds or at `rounds`.
+    - The caches and checkpoints the loop creates are released once a
+      finished job has filled their successor, or when it raises.
+    """
+    owned: list[DataFrame] = []  # caches and checkpoints made here
+
+    def persist(df: DataFrame) -> DataFrame:
+        owned.append(df.persist())
         return df
 
-    def release_older_than(self, *keep: DataFrame) -> None:
-        for p in self._pending:
-            if not any(p is k for k in keep):
-                p.unpersist()
-        self._pending = list(keep)
+    def release(keep: DataFrame | None = None) -> None:
+        for df in owned:
+            if df is not keep and df.is_cached:
+                df.unpersist()
+            elif df is not keep:
+                release_checkpoint(df)
+        owned[:] = [] if keep is None else [keep]
 
-    def checkpoint(self, df: DataFrame) -> int:
-        n = df.count()
-        self.release_older_than(df)
-        return n
+    if readers > 1 and not gen.is_cached:
+        persist(gen)
+    try:
+        for t in range(start + 1, rounds + 1):
+            prev, gen = gen, step(gen)
+            cut = t % PREGEL_CKPT_INTERVAL == 0 and t < rounds
+            if converged is not None:
+                done = converged(prev, persist(gen))
+                release(keep=gen)
+                if done:
+                    break
+            elif readers > 1 and t < rounds and not cut:
+                persist(gen)
+            if cut:
+                gen = plan_truncate(gen)
+                release()
+                owned.append(gen)
+        if converged is None or not gen.is_cached:
+            persist(gen).count()
+    finally:
+        release(keep=gen)
+    return gen
 
-    def truncate(self, df: DataFrame) -> DataFrame:
-        """INTERVAL checkpoint: materialize + TRUNCATE the plan
-        (localCheckpoint) and release every pending cache — caching
-        alone bounds recompute but NOT the logical plan, which doubles
-        per round in the double-consumer ops (union/two-endpoint
-        joins) and OOMs driver-side analysis past ~10 rounds even on
-        tiny data; the LogicalRDD restart bounds plan size at
-        2^PREGEL_CKPT_INTERVAL subtrees.  The FINAL generation still
-        uses persist+count (`checkpoint`) so the returned relation is
-        a conventional caller-owned cache."""
-        out = plan_truncate(df)
-        self.release_older_than()
-        return out
 
+class Unchanged:
+    """Fixpoint predicate for `iterate` over a monotone scalar
+    (a count of reached or surviving nodes, a label sum): converged
+    once `scalar` — one job — is equal on two consecutive generations.
+    The first call also measures the start generation.  `hit` says
+    whether the loop converged rather than ran out of rounds."""
 
-def _release_superseded_checkpoints(t: int) -> None:
-    """Fixpoint loops replace each generation with a fresh
-    localCheckpoint; the superseded generation's blocks are freed by
-    the ContextCleaner only once its JVM RDD object is unreachable,
-    and the py4j proxy held by the old Python DataFrame is what keeps
-    it reachable (DataFrame.unpersist() does not touch checkpoint
-    blocks).  A periodic gc.collect() drops the proxies promptly,
-    bounding executor storage at ~PREGEL_CKPT_INTERVAL generations
-    instead of max_rounds."""
-    if t % PREGEL_CKPT_INTERVAL == 0:
-        _pygc.collect()
+    def __init__(self, scalar: Callable[[DataFrame], object]) -> None:
+        self.scalar = scalar
+        self.values: list[object] = []
+
+    def __call__(self, prev: DataFrame, new: DataFrame) -> bool:
+        if not self.values:
+            self.values.append(self.scalar(prev))
+        self.values.append(self.scalar(new))
+        return self.hit
+
+    @property
+    def hit(self) -> bool:
+        return len(self.values) > 1 and self.values[-1] == self.values[-2]
 
 
 #: Wedge-join hub cap for `graph_neighbor_jaccard`: wedges routed
@@ -262,7 +305,7 @@ def graph_pagerank(
     so tol=0 runs to ``max_iters`` by design and a production caller
     sets tol to e.g. n_nodes — average drift below one 10⁻¹² rank
     unit per node), capped at ``max_iters``; the per-round delta
-    aggregate doubles as the materializing action.
+    aggregate is the round's one job and fills the generation.
 
     Scale shape (the Pregel shuffle profile): per iteration ONE
     dst-keyed shuffle of (dst, contrib) partial aggregates — map-side
@@ -272,14 +315,9 @@ def graph_pagerank(
     persist alone is lazy, so without an action the cache would be
     built and torn down inside one job and every iteration would
     recompute the join.  Rank generations are SINGLE-consumer (each
-    feeds exactly one contribution join), so intermediates are not
-    persisted at all — each evaluates exactly once inside the
-    checkpoint job regardless (measured: persisting every generation
-    costs ~25% extra at sf0.1, eager-counting each ~55%); a
-    persist + eager count runs every PREGEL_CKPT_INTERVAL rounds and
-    on the final generation, which is what bounds recompute-on-
-    executor-loss and is the cached relation handed to the caller
-    (repo convention: caller-owned lifetime).  No broadcast of
+    feeds exactly one contribution join), so `iterate` does not
+    persist them (measured: persisting every generation costs ~25%
+    extra at sf0.1, eager-counting each ~55%).  No broadcast of
     anything corpus-sized; nothing driver-side beyond the fixpoint
     scalar.
     """
@@ -288,57 +326,39 @@ def graph_pagerank(
     ed = edges.join(deg, "src").persist()
     ed.count()
     nodes = table(spark, sf_dir, "documents").select(F.col("doc_id").alias("id"))
-    gc = _GenerationCaches()
-    ranks = nodes.select("id", F.lit(PR_SCALE).cast("long").alias("rank"))
-    iters = max_iters if to_fixpoint else PR_ITERS
-    for t in range(1, iters + 1):
+
+    def power_step(ranks: DataFrame) -> DataFrame:
         contrib = (
             ed.join(ranks, ed["src"] == ranks["id"])
             .select("dst", F.expr("rank div outdeg").alias("c"))
             .groupBy("dst")
             .agg(F.sum("c").alias("contrib"))
         )
-        raw = nodes.join(contrib, nodes["id"] == contrib["dst"], "left").select(
+        return nodes.join(contrib, nodes["id"] == contrib["dst"], "left").select(
             "id",
             F.expr(
                 f"(cast({15 * PR_SCALE} as bigint)"
                 " + 85 * coalesce(contrib, cast(0 as bigint))) div 100"
             ).alias("rank"),
         )
-        if to_fixpoint:
-            # localCheckpoint(eager) materializes AND truncates the
-            # logical plan to a LogicalRDD — without truncation the
-            # unrolled plan grows unboundedly over open-ended rounds
-            # (analysis cost + tree strings OOM the driver long before
-            # data does).  Then one scalar per round (the
-            # connected_components pattern) over the two checkpointed
-            # generations.
-            new = plan_truncate(raw)
-            delta = (
-                new.alias("n")
-                .join(ranks.alias("o"), F.col("n.id") == F.col("o.id"))
-                .agg(F.sum(F.abs(F.col("n.rank") - F.col("o.rank"))).alias("d"))
-                .head()["d"]
-            )
-            gc.release_older_than()  # release any interval checkpoint
-            _release_superseded_checkpoints(t)
-            ranks = new
-            # Sum over ZERO rows is NULL (empty corpus → empty join):
-            # an empty rank vector is trivially converged.
-            if delta is None or delta <= tol:
-                break
-        else:
-            # Each generation is SINGLE-consumer (one contribution
-            # join), so intermediate persists are pure overhead
-            # (measured: caching every generation costs ~25% at
-            # sf0.1); only interval checkpoints and the final
-            # generation persist + materialize.
-            if t % PREGEL_CKPT_INTERVAL == 0 or t == iters:
-                new = gc.add(raw)
-                gc.checkpoint(new)
-            else:
-                new = raw
-            ranks = new
+
+    def settled(old: DataFrame, new: DataFrame) -> bool:
+        delta = (
+            new.alias("n")
+            .join(old.alias("o"), F.col("n.id") == F.col("o.id"))
+            .agg(F.sum(F.abs(F.col("n.rank") - F.col("o.rank"))).alias("d"))
+            .head()["d"]
+        )
+        # Sum over ZERO rows is NULL (empty corpus → empty join): an
+        # empty rank vector is trivially converged.
+        return delta is None or delta <= tol
+
+    ranks = iterate(
+        nodes.select("id", F.lit(PR_SCALE).cast("long").alias("rank")),
+        power_step,
+        max_iters if to_fixpoint else PR_ITERS,
+        converged=settled if to_fixpoint else None,
+    )
     ed.unpersist()
     return ranks.select(
         F.col("id").alias("doc_id"), F.col("rank").cast("long").alias("pagerank")
@@ -529,63 +549,35 @@ def graph_bfs(
     frontier exhaustion — the reached set grows monotonically and a
     node's level never changes once assigned (BFS level order), so
     the per-round row COUNT is itself the convergence scalar: count
-    unchanged ⇔ no new node reached ⇔ done.  The count is exactly the
-    materializing action the cache discipline wants, so fixpoint mode
-    pays nothing extra.
+    unchanged ⇔ no new node reached ⇔ done.  The count is the round's
+    one job and fills the generation, so fixpoint mode pays nothing
+    extra.
 
     Scale shape: per round ONE src-keyed join (frontier ⋈ edges) + a
     min-aggregate — frontier-proportional work, the Pregel profile
-    again.  Distance generations use the PREGEL_CKPT_INTERVAL cache
-    discipline (see graph_pagerank): lazily persisted every round —
-    each generation is consumed TWICE (the relax join and the union),
-    and a persisted plan is one shared InMemoryRelation, so both
-    consumers read one evaluation — with the eager count every Nth
-    round and on the final one, older generations released only after
-    it.  The final generation stays cached (caller-owned lifetime).
-    Unreached nodes never enter the relation (no dense |V| state
-    until reached — at 100 TB the early frontiers are tiny and so are
-    the shuffles).
+    again.  Each distance generation is read TWICE (the relax join
+    and the union), so `iterate` persists it lazily.  Unreached nodes
+    never enter the relation (no dense |V| state until reached — at
+    100 TB the early frontiers are tiny and so are the shuffles).
     """
     edges = link_edges(spark, sf_dir).persist()
     edges.count()
-    d = table(spark, sf_dir, "documents")
-    gc = _GenerationCaches()
-    dist = gc.add(
-        d.filter(F.col("doc_id") % BFS_SOURCE_MOD == 0).select(
-            F.col("doc_id").alias("id"), F.lit(0).alias("dist")
-        )
-    )
-    reached = gc.checkpoint(dist) if to_fixpoint else None
-    rounds = max_rounds if to_fixpoint else BFS_ROUNDS
-    for t in range(1, rounds + 1):
+
+    def relax(dist: DataFrame) -> DataFrame:
         relaxed = edges.join(dist, edges["src"] == dist["id"]).select(
             F.col("dst").alias("id"), (F.col("dist") + 1).alias("dist")
         )
-        raw = dist.unionAll(relaxed).groupBy("id").agg(F.min("dist").alias("dist"))
-        if to_fixpoint:
-            # localCheckpoint(eager) = materialize + TRUNCATE the plan
-            # (each round's union references the previous generation
-            # twice — unrolled, the logical plan doubles per round and
-            # OOMs the driver; see graph_pagerank).  Its count is the
-            # convergence scalar, read from the checkpointed blocks.
-            new = plan_truncate(raw)
-            n = new.count()
-            gc.release_older_than()  # drop the persisted source gen
-            _release_superseded_checkpoints(t)
-            dist = new
-            if n == reached:
-                break
-            reached = n
-        elif t == rounds:
-            new = gc.add(raw)
-            gc.checkpoint(new)
-            dist = new
-        elif t % PREGEL_CKPT_INTERVAL == 0:
-            dist = gc.truncate(raw)
-        else:
-            # double-consumer (relax join + union): lazy persist so
-            # both readers share one InMemoryRelation per job.
-            dist = gc.add(raw)
+        return dist.unionAll(relaxed).groupBy("id").agg(F.min("dist").alias("dist"))
+
+    dist = iterate(
+        table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % BFS_SOURCE_MOD == 0)
+        .select(F.col("doc_id").alias("id"), F.lit(0).alias("dist")),
+        relax,
+        max_rounds if to_fixpoint else BFS_ROUNDS,
+        readers=2,
+        converged=Unchanged(DataFrame.count) if to_fixpoint else None,
+    )
     edges.unpersist()
     return dist.select(
         F.col("id").alias("doc_id"), F.col("dist").cast("long").alias("dist")
@@ -642,31 +634,23 @@ def graph_kcore(
     ``to_fixpoint=True`` (round-9 VERDICT item 5) peels until no node
     drops: the alive set shrinks monotonically, so the per-round
     alive COUNT is the convergence scalar (count unchanged ⇔ the sets
-    are equal ⇔ fixpoint) — and that count is exactly the
-    materializing action the cache discipline wants, so fixpoint mode
-    pays nothing extra per round.
+    are equal ⇔ fixpoint), and that count is the round's one job.
 
     Scale shape: per round two node-keyed equi-joins (edge ⋈ alive on
     each endpoint — alive is node-sized, never broadcast) + ONE
     u-keyed count aggregate; work is proportional to SURVIVING edges,
     so rounds get cheaper as the graph peels.  The symmetrized edge
-    relation is persisted + materialized once; alive generations use
-    the PREGEL_CKPT_INTERVAL cache discipline (see graph_pagerank):
-    lazily persisted every round — alive is consumed TWICE per round
-    (one join per endpoint) and a persisted plan is one shared
-    InMemoryRelation, so both joins read one evaluation — with the
-    eager count every Nth round and on the final one.  The final
-    round's degree relation stays cached (caller-owned lifetime) and
-    is the returned relation.
+    relation is persisted + materialized once; each survivor
+    generation is read TWICE per round (one join per endpoint), so
+    `iterate` persists it lazily.  The final round's survivors are the
+    returned relation.
     """
     deg = kcore_degrees(
         undirected(link_edges(spark, sf_dir)),
         to_fixpoint=to_fixpoint,
         max_rounds=max_rounds,
     )
-    return deg.filter(F.col("d") >= KCORE_K).select(
-        F.col("u").alias("doc_id"), F.col("d").cast("long").alias("deg")
-    )
+    return deg.select(F.col("u").alias("doc_id"), F.col("d").cast("long").alias("deg"))
 
 
 def kcore_degrees(
@@ -677,63 +661,30 @@ def kcore_degrees(
     max_rounds: int = 60,
 ) -> DataFrame:
     """Library core of `graph_kcore` over ANY symmetrized edge
-    relation: the last peel round's (u, d) degree relation (persisted,
-    caller-owned; filter d >= k for the survivors) — bench-run on a
-    power-law graph (round-9 VERDICT item 7)."""
+    relation: the last peel round's survivors (u, d), d their degree
+    within the previous round's survivors (persisted, caller-owned) —
+    bench-run on a power-law graph (round-9 VERDICT item 7)."""
     sym = sym.persist()
     sym.count()
-    gc = _GenerationCaches()
-    alive = gc.add(sym.select(F.col("u").alias("id")).distinct())
-    n_alive = gc.checkpoint(alive) if to_fixpoint else None
 
-    def degrees(alive: DataFrame) -> DataFrame:
-        a1 = alive.select(F.col("id").alias("au"))
-        a2 = alive.select(F.col("id").alias("av"))
+    def peel(alive: DataFrame) -> DataFrame:
+        a1 = alive.select(F.col("u").alias("au"))
+        a2 = alive.select(F.col("u").alias("av"))
         return (
             sym.join(a1, sym["u"] == F.col("au"))
             .join(a2, sym["v"] == F.col("av"))
             .groupBy("u")
             .agg(F.count(F.lit(1)).alias("d"))
+            .filter(F.col("d") >= k)
         )
 
-    deg = None
-    n_rounds = max_rounds if to_fixpoint else rounds
-    for t in range(1, n_rounds + 1):
-        deg = degrees(alive)
-        if to_fixpoint:
-            # localCheckpoint(eager) = materialize + TRUNCATE the plan
-            # (deg references alive twice — one join per endpoint —
-            # so the unrolled plan doubles per round; see
-            # graph_pagerank).  alive is a cheap filter-projection
-            # over the checkpointed deg; its count is the convergence
-            # scalar (monotone shrink ⇒ equal counts ⇔ equal sets).
-            deg = plan_truncate(deg)
-            alive = deg.filter(F.col("d") >= k).select(
-                F.col("u").alias("id")
-            )
-            n2 = alive.count()
-            gc.release_older_than()  # drop the initial persisted gen
-            _release_superseded_checkpoints(t)
-            if n2 == n_alive:
-                break
-            n_alive = n2
-        elif t == n_rounds:
-            # Final round: only the degree relation is needed (the
-            # output filters it directly) — building and eagerly
-            # counting one more alive generation would be a wasted
-            # job + cache fill.
-            deg = gc.add(deg)
-            gc.checkpoint(deg)
-            break
-        else:
-            a_raw = deg.filter(F.col("d") >= k).select(F.col("u").alias("id"))
-            # double-consumer (one join per endpoint): lazy persist;
-            # interval checkpoints TRUNCATE the doubling plan.
-            alive = (
-                gc.truncate(a_raw)
-                if t % PREGEL_CKPT_INTERVAL == 0
-                else gc.add(a_raw)
-            )
+    deg = iterate(
+        sym.select("u").distinct(),
+        peel,
+        max_rounds if to_fixpoint else rounds,
+        readers=2,
+        converged=Unchanged(DataFrame.count) if to_fixpoint else None,
+    )
     sym.unpersist()
     return deg
 
@@ -783,7 +734,7 @@ def graph_lpa(
     neighbors, ties to the smallest — {LPA_ROUNDS} fixed rounds,
     unrolled verbatim in the oracle.  Completes the graph family's
     GROUPING axis (k-core finds the dense backbone, this partitions
-    the whole graph; connected_components in functions/dedup.py is
+    the whole graph; `connected_components` below is
     the degenerate always-adopt-min rule).
 
     Scale shape: per round one v-keyed join (labels ⋈ edges) feeding
@@ -791,12 +742,11 @@ def graph_lpa(
     reduce — the argmax is a single `max(struct(count, -label))`
     aggregate, partial-agg-able, NOT a per-node window (the oracle's
     window form is the same math; the engine keeps the combiner
-    shape).  Label generations use the PREGEL_CKPT_INTERVAL cache
-    discipline (see graph_pagerank); final cached caller-owned.
-    ``to_fixpoint=True`` (round-9 VERDICT item 5) propagates until no
-    label changes (exact integer labels ⇒ bit-equality convergence,
-    one changed-count scalar per round that doubles as the
-    materializing action), capped at ``max_rounds`` — synchronous LPA
+    shape); label generations are read once, so `iterate` does not
+    persist them.  ``to_fixpoint=True`` (round-9 VERDICT item 5)
+    propagates until no label changes (exact integer labels ⇒
+    bit-equality convergence, one changed-count scalar per round that
+    fills the generation), capped at ``max_rounds`` — synchronous LPA
     can 2-cycle on bipartite-ish structures, so the cap is load-
     bearing, not cosmetic.
     """
@@ -821,50 +771,34 @@ def lpa_communities(
     graph (round-9 VERDICT item 7)."""
     sym = sym.persist()
     sym.count()
-    gc = _GenerationCaches()
-    labels = sym.select(F.col("u").alias("id"), F.col("u").alias("lab")).distinct()
-    rounds = max_rounds if to_fixpoint else rounds
-    for t in range(1, rounds + 1):
+
+    def propagate(labels: DataFrame) -> DataFrame:
         votes = (
             sym.join(labels, sym["v"] == labels["id"])
             .select(F.col("u"), F.col("lab"))
             .groupBy("u", "lab")
             .agg(F.count(F.lit(1)).alias("c"))
         )
-        raw = (
+        return (
             votes.groupBy("u")
             .agg(F.max(F.struct(F.col("c"), (-F.col("lab")).alias("nl"))).alias("m"))
             .select(F.col("u").alias("id"), (-F.col("m.nl")).cast("long").alias("lab"))
         )
-        if to_fixpoint:
-            # localCheckpoint(eager) = materialize + TRUNCATE the plan
-            # (see graph_pagerank); the changed-label count over the
-            # two checkpointed generations is the convergence scalar.
-            new = plan_truncate(raw)
-            changed = (
-                new.alias("n")
-                .join(labels.alias("o"), F.col("n.id") == F.col("o.id"))
-                .filter(F.col("n.lab") != F.col("o.lab"))
-                .count()
-            )
-            gc.release_older_than()  # release any interval checkpoint
-            _release_superseded_checkpoints(t)
-            labels = new
-            if changed == 0:
-                break
-        else:
-            # Label generations are SINGLE-consumer (one votes join),
-            # so intermediates are not persisted (the graph_pagerank
-            # measurement); interval checkpoints TRUNCATE, the final
-            # generation persists + materializes, caller-owned.
-            if t == rounds:
-                new = gc.add(raw)
-                gc.checkpoint(new)
-            elif t % PREGEL_CKPT_INTERVAL == 0:
-                new = gc.truncate(raw)
-            else:
-                new = raw
-            labels = new
+
+    def stable(old: DataFrame, new: DataFrame) -> bool:
+        return (
+            new.alias("n")
+            .join(old.alias("o"), F.col("n.id") == F.col("o.id"))
+            .filter(F.col("n.lab") != F.col("o.lab"))
+            .count()
+        ) == 0
+
+    labels = iterate(
+        sym.select(F.col("u").alias("id"), F.col("u").alias("lab")).distinct(),
+        propagate,
+        max_rounds if to_fixpoint else rounds,
+        converged=stable if to_fixpoint else None,
+    )
     sym.unpersist()
     return labels
 
@@ -925,73 +859,49 @@ def graph_cc(
 ) -> DataFrame:
     """CONNECTED COMPONENTS over the link graph — the graph family's
     reachability member promoted to a registered key (the engine core,
-    functions/dedup.py `connected_components`, has powered dedup/ER
-    clustering since round 3; this exposes the same min-label
-    propagation on the shared synthesized graph with a value-exact
-    oracle). {CC_ROUNDS} fixed synchronous rounds (the `graph_kcore`
-    fixed-round contract): label_t(v) = min doc_id within distance t,
-    well-defined with or without convergence; the fixture converges in
-    7 effective rounds (measured), so fixed-{CC_ROUNDS} IS the true
-    component labelling there — asserted against the fixpoint engine
-    in tests.  `comp_mid` (the distance-{CC_ROUNDS // 2} labels)
-    makes the check discriminating after the giant component collapses
-    every final label to the global min.
+    `connected_components` below, has powered dedup/ER clustering
+    since round 3; this exposes the same min-label propagation on the
+    shared synthesized graph with a value-exact oracle). {CC_ROUNDS}
+    fixed synchronous rounds (the `graph_kcore` fixed-round contract):
+    label_t(v) = min doc_id within distance t, well-defined with or
+    without convergence; the fixture converges in 7 effective rounds
+    (measured), so fixed-{CC_ROUNDS} IS the true component labelling
+    there — asserted against the fixpoint engine in tests.  `comp_mid`
+    (the distance-{CC_ROUNDS // 2} labels) makes the check
+    discriminating after the giant component collapses every final
+    label to the global min.
 
     Scale shape: per round ONE fused union+min — the self row unioned
     with the v-keyed equi-join (labels ⋈ sym edges) into a node-keyed
     partial-agg min (covers isolated nodes without a second left
     join; with the 10→7 round cut, measured 9.1 → 4.6 s cold at sf0.1) —
-    the Pregel profile shared with pagerank/LPA, label generations on
-    the PREGEL_CKPT_INTERVAL cache discipline, mid generation captured
-    by one localCheckpoint.  ``to_fixpoint=True`` iterates until the
-    label sum stops changing (labels only DECREASE, so Σcomp is
-    strictly monotone while anything moves — one exact integer scalar
-    per round, the `connected_components` convergence trick), capped
-    at ``max_rounds``.
+    the Pregel profile shared with pagerank/LPA.  Each label
+    generation is read twice (join and union), so `iterate` persists
+    it; the rounds run as two `iterate` calls, the first ending at the
+    mid generation, which stays cached for the final join.
+    ``to_fixpoint=True`` is `connected_components` itself, capped at
+    ``max_rounds`` — it raises when the labels have not converged.
     """
-    sym = undirected(link_edges(spark, sf_dir)).persist()
-    sym.count()
+    sym = undirected(link_edges(spark, sf_dir))
     nodes = table(spark, sf_dir, "documents").select(F.col("doc_id").alias("id"))
-    gc = _GenerationCaches()
-    labels = nodes.select("id", F.col("id").alias("comp"))
-    mid = None
-    rounds = max_rounds if to_fixpoint else CC_ROUNDS
-    prev_sum = None
-    for t in range(1, rounds + 1):
-        raw = (
+    if to_fixpoint:
+        return connected_components(sym, nodes, max_iters=max_rounds)
+    sym = sym.persist()
+    sym.count()
+
+    def spread(labels: DataFrame) -> DataFrame:
+        return (
             sym.join(labels, sym["v"] == labels["id"])
             .select(F.col("u").alias("id"), F.col("comp"))
             .unionByName(labels)
             .groupBy("id")
             .agg(F.min("comp").alias("comp"))
         )
-        if to_fixpoint:
-            new = plan_truncate(raw)
-            cur_sum = new.agg(F.sum("comp")).collect()[0][0]
-            gc.release_older_than()
-            _release_superseded_checkpoints(t)
-            labels = new
-            if prev_sum is not None and cur_sum == prev_sum:
-                break
-            prev_sum = cur_sum
-        else:
-            if t == CC_ROUNDS // 2:
-                # mid generation survives to the final join: truncate
-                # + materialize once, independent of later releases
-                labels = plan_truncate(raw)
-                mid = labels
-            elif t == rounds:
-                labels = gc.add(raw)
-                gc.checkpoint(labels)
-            elif t % PREGEL_CKPT_INTERVAL == 0:
-                labels = gc.truncate(raw)
-            else:
-                labels = raw
+
+    half = CC_ROUNDS // 2
+    mid = iterate(nodes.select("id", F.col("id").alias("comp")), spread, half, readers=2)
+    labels = iterate(mid, spread, CC_ROUNDS, readers=2, start=half)
     sym.unpersist()
-    if to_fixpoint:
-        return labels.select(
-            "id", F.col("comp").cast("long").alias("component")
-        )
     return (
         labels.alias("a")
         .join(mid.alias("b"), F.col("a.id") == F.col("b.id"))
@@ -1001,3 +911,65 @@ def graph_cc(
             F.col("a.comp").cast("long").alias("component"),
         )
     )
+
+
+def connected_components(
+    edges: DataFrame, vertices: DataFrame, max_iters: int = 20
+) -> DataFrame:
+    """Connected components by iterative min-label propagation.
+
+    vertices: (id long); edges: (u, v) one row per DIRECTED edge (pass
+    both directions for an undirected graph). Returns (id, component)
+    where component = min id reachable, for exactly the input vertex
+    ids. Each iteration is one shuffle (join on the edge key) + one
+    aggregate; iterations needed = graph diameter. Labels only ever
+    DECREASE, so Σcomponent is strictly monotone while anything
+    changes — one aggregate per round (`Unchanged`) is the
+    convergence check and fills the round's generation.  Raises when
+    the labels have not converged within `max_iters`.
+    """
+    # TRUNCATE the input plan, don't just cache it: every round
+    # re-embeds the input's lineage in its analyzed plan (neigh_min
+    # joins edges each round), so driver-side re-analysis grows with
+    # input-plan size × rounds — with the winnow verify's subtree that
+    # analysis dominated the loop (measured: 8.5 s of a 10.4 s
+    # pipeline_near_dedup; 1.2 s after the restart).  Released when
+    # the loop ends.
+    edges = plan_truncate(edges)
+
+    def propagate(labels: DataFrame) -> DataFrame:
+        neigh_min = (
+            edges.join(labels, edges["v"] == labels["id"])
+            .groupBy("u")
+            .agg(F.min("component").alias("nmin"))
+        )
+        return labels.join(neigh_min, labels["id"] == neigh_min["u"], "left").select(
+            "id",
+            F.least(
+                F.col("component"), F.coalesce(F.col("nmin"), F.col("component"))
+            ).alias("component"),
+        )
+
+    stable = Unchanged(lambda g: g.agg(F.sum("component")).collect()[0][0])
+    try:
+        labels = iterate(
+            vertices.select(F.col("id"), F.col("id").alias("component")),
+            propagate,
+            max_iters,
+            readers=2,
+            converged=stable,
+        )
+    finally:
+        release_checkpoint(edges)
+    if not stable.hit:
+        # Silent unconvergence would hand back WRONG component labels
+        # (multiple labels inside one true component) and dedup would keep
+        # extra near-dup docs with no error signal. Each round is one
+        # bounded shuffle, so callers should raise max_iters rather than
+        # tolerate a truncated fixpoint.
+        raise RuntimeError(
+            f"connected_components did not converge within {max_iters} "
+            "iterations (graph diameter exceeds max_iters); labels would "
+            "be incorrect — increase max_iters"
+        )
+    return labels

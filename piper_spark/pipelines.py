@@ -34,11 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from piper_spark.functions.dedup import (
-    connected_components,
-    lsh_candidate_pairs,
-    minhash_signatures,
-)
+from piper_spark.functions.dedup import lsh_candidate_pairs, minhash_signatures
+from piper_spark.functions.graphs import connected_components
 from piper_spark.registry import register
 from piper_spark.session import eager_fill, table
 from piper_spark.sources.sinks import write_partitioned

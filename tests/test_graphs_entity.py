@@ -790,3 +790,57 @@ def test_graph_cc_fixed_rounds_reach_true_components(spark):
            for r in graph_cc(spark, SF_SMOKE, to_fixpoint=True).collect()}
     assert fix == truth
     assert any(mid != comp for mid, comp in out.values())
+    with pytest.raises(RuntimeError, match="did not converge"):
+        graph_cc(spark, SF_SMOKE, to_fixpoint=True, max_rounds=2)
+
+
+def test_connected_components_plan_does_not_grow_with_rounds(spark):
+    """A path of n nodes converges at round n.  Rounds 6 and 11 sit at
+    the same offset after a plan truncation, so the returned frame's
+    analyzed plan must have as many leaves at 11 rounds as at 6;
+    without truncation the leaves double every round."""
+    from piper_spark.functions.graphs import connected_components
+
+    def leaves(n: int) -> int:
+        und = [(i, i + 1) for i in range(n - 1)]
+        edges = spark.createDataFrame(und + [(v, u) for u, v in und], "u long, v long")
+        verts = spark.createDataFrame([(i,) for i in range(n)], "id long")
+        comp = connected_components(edges, verts)
+        assert sorted(comp.collect()) == [(i, 0) for i in range(n)]
+        return comp._jdf.queryExecution().analyzed().collectLeaves().size()
+
+    assert leaves(11) <= leaves(6)
+
+
+def _stored_rdds(spark) -> set[int]:
+    return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+@pytest.mark.parametrize(
+    "key",
+    [
+        "graph_pagerank",
+        "graph_bfs",
+        "graph_kcore",
+        "graph_lpa",
+        "graph_cc",
+        "dedup_clusters",
+        "pipeline_near_dedup",
+    ],
+)
+def test_iterative_key_leaves_no_storage_after_clear_cache(spark, key):
+    """Build, run, `clearCache()`: no RDD blocks may remain that were
+    not stored before.  Local checkpoints are outside the cache
+    manager, so this fails for any checkpoint the loop does not
+    release itself."""
+    import time
+
+    before = _stored_rdds(spark)
+    registry.all_queries()[key](spark, SF_SMOKE).write.format("noop").mode(
+        "overwrite"
+    ).save()
+    spark.catalog.clearCache()
+    deadline = time.monotonic() + 10  # block removal is asynchronous
+    while (left := _stored_rdds(spark) - before) and time.monotonic() < deadline:
+        time.sleep(0.2)
+    assert not left
