@@ -1521,6 +1521,7 @@ def fake_decode_meta(payload: bytes) -> tuple[int, int, int]:
     return 1 + n % 64, 1 + n % 48, n
 
 
+@functools.lru_cache(maxsize=256)
 def _area_weights(n_in: int, n_out: int) -> np.ndarray:
     """(n_out × n_in) row-stochastic weights: W[i, r] = |overlap of source
     pixel r with destination interval [i·s, (i+1)·s)| / s, s = n_in/n_out.
@@ -1528,7 +1529,8 @@ def _area_weights(n_in: int, n_out: int) -> np.ndarray:
     This is exactly cv2.INTER_AREA for downscale; for upscale the
     intervals shrink below one source pixel and it degenerates to a
     (correct but unsmoothed) box sample, same as INTER_AREA's behavior
-    of not interpolating new detail.
+    of not interpolating new detail. Memoized per shape pair (a corpus
+    has few image sizes); the shared array is read-only.
     """
     s = n_in / n_out
     w = np.zeros((n_out, n_in))
@@ -1536,6 +1538,7 @@ def _area_weights(n_in: int, n_out: int) -> np.ndarray:
         lo, hi = i * s, (i + 1) * s
         for r in range(int(np.floor(lo)), min(int(np.ceil(hi)), n_in)):
             w[i, r] = (min(r + 1, hi) - max(r, lo)) / s
+    w.flags.writeable = False
     return w
 
 
@@ -2275,6 +2278,13 @@ def audio_wav_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: pHash geometry: resize to 32×32 gray, keep the 8×8 low-frequency DCT
 #: block, threshold against the median of its 63 AC coefficients.
 PHASH_SIZE, PHASH_KEEP = 32, 8
+#: The PHASH_SIZE-point DCT-II basis, row k = frequency k.
+_PHASH_DCT = np.cos(
+    np.pi
+    * (np.arange(PHASH_SIZE)[None, :] + 0.5)
+    * np.arange(PHASH_SIZE)[:, None]
+    / PHASH_SIZE
+)
 
 
 def phash64(img: np.ndarray) -> int:
@@ -2290,10 +2300,7 @@ def phash64(img: np.ndarray) -> int:
         PHASH_SIZE,
         PHASH_SIZE,
     )[:, :, 0].astype(np.float64)
-    n = PHASH_SIZE
-    k = np.arange(n)[:, None]
-    c = np.cos(np.pi * (np.arange(n)[None, :] + 0.5) * k / n)  # DCT-II basis
-    dct = c @ small @ c.T
+    dct = _PHASH_DCT @ small @ _PHASH_DCT.T
     block = dct[:PHASH_KEEP, :PHASH_KEEP].ravel()
     med = np.median(block[1:])
     bits = block > med

@@ -82,6 +82,33 @@ def test_area_weights_are_row_stochastic():
         np.testing.assert_allclose(w.sum(axis=1), 1.0)
 
 
+def test_memoized_area_weights_match_fresh_and_are_read_only(monkeypatch):
+    import piper_spark.sources.multimodal as mm
+
+    rng = np.random.default_rng(7)
+    imgs = [
+        rng.integers(0, 256, shape, dtype=np.uint8)
+        for shape in [(48, 64, 3), (33, 17, 3), (32, 32, 3), (5, 90, 3)]
+    ]
+
+    def outputs():
+        return [
+            (resize_area(im, 32, 32), resize_area(im, 11, 7), mm.phash64(im))
+            for im in imgs
+        ]
+
+    cached = outputs()
+    monkeypatch.setattr(mm, "_area_weights", mm._area_weights.__wrapped__)
+    fresh = outputs()
+    for (a32, a11, ah), (f32, f11, fh) in zip(cached, fresh):
+        assert np.array_equal(a32, f32)
+        assert np.array_equal(a11, f11)
+        assert ah == fh
+    w = _area_weights(48, 32)
+    with pytest.raises(ValueError):
+        w[0, 0] = 1.0
+
+
 def test_resize_area_integer_downscale_is_block_mean():
     # 4×4 → 2×2 with a 2× integer ratio: each output pixel is the exact
     # mean of its 2×2 source block (the INTER_AREA definition).
