@@ -1225,10 +1225,10 @@ def dedup_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     localized-overlap class is `dedup_substring`'s output (it reports
     the shared run itself, with no doc-level similarity gate).
 
-    Shape: zero-shuffle fingerprinting (`winnow_fps`) → df-cap the fp
-    relation (one hash agg; kills boilerplate buckets) → self equi-join
-    ON fp (bucketed; per-bucket fan-out <= C(WINNOW_MAX_DF, 2) pairs)
-    → pair hash-agg with a shared-count threshold → exact shingle-
+    Shape: zero-shuffle fingerprinting (`winnow_fps`) →
+    `lsh.capped_pairs` on fp (df-capped self equi-join; per-bucket
+    fan-out <= C(WINNOW_MAX_DF, 2) pairs; contract in ARCHITECTURE.md,
+    "Dedup") → pair hash-agg with a shared-count threshold → exact shingle-
     Jaccard VERIFY on the surviving candidates (two id-keyed joins back
     to the shingle arrays; candidate volume is already bounded by the
     df-cap, so the verify never sees all-pairs — same candidates-then-
@@ -1238,23 +1238,16 @@ def dedup_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     8-byte fingerprints or doc ids."""
     from piper_spark.functions.text import winnow_fps
 
-    # Spread before the per-row fingerprint fold (pipeline_curate
-    # pattern): a one-split test input would serialize it; at scale the
-    # input's own splits make this a cheap round-robin of ~300 B rows.
-    docs = table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
-    # persist: the df-cap aggregate AND the self-join's two aliases all
-    # read the fingerprint relation — one fingerprint pass, not three
-    # (the dedup_audio signature-table lesson). Round-13 (ADVICE 4):
-    # materialize the pair-sized result, then release the fingerprint
-    # cache AND the verify stage's internal (cand, sh) caches — the
-    # caller gets one owned handle, no orphans.
-    # eager_fill: the df-cap aggregate and BOTH self-join aliases fan
-    # in on this cache inside the single consuming action (VERDICT 1).
-    fps = eager_fill(winnow_fps(docs).persist())
-    caches: list[DataFrame] = [fps]
-    out = _winnow_verified_pairs(docs, fps, caches=caches).persist()
+    # No spread here: `winnow_fps` and the verify each spread their own
+    # scan (fan_out), a no-op at scale.
+    docs = table(spark, sf_dir, "documents")
+    # Materialize the pair-sized result, then release the verify
+    # stage's internal (cand, sh) caches — the caller gets one owned
+    # handle, no orphans.
+    caches: list[DataFrame] = []
+    out = _winnow_verified_pairs(
+        docs, winnow_fps(docs), caches=caches
+    ).persist()
     out.count()
     for c in caches:
         c.unpersist()
@@ -1265,63 +1258,57 @@ def _winnow_verified_pairs(
     docs: DataFrame, fps: DataFrame, caches: "list[DataFrame] | None" = None
 ) -> DataFrame:
     """(id1, id2, shared, jaccard) df-capped + verified winnow pairs
-    from a PERSISTED fingerprint relation — `dedup_winnow`'s candidate
-    + verify stages, factored so `dedup_ensemble` can vote on the
-    spine's shared fingerprints. Caller persists `fps` (the df-cap agg
-    and both self-join aliases read it).
+    from a (doc_id, fp) fingerprint relation — `dedup_winnow`'s
+    candidate + verify stages, factored so `dedup_ensemble` can vote on
+    the spine's shared fingerprints. Candidates come from
+    `lsh.capped_pairs` (ARCHITECTURE.md, "Dedup"), which reads `fps`
+    once, so the caller need not persist it. The internal persists
+    (cand, sh) are appended to ``caches``; the caller releases them
+    with its other stage caches."""
+    from piper_spark.functions.lsh import capped_pairs
 
-    Round-12 (ADVICE 1+3): the shingle-Jaccard verify is CANDIDATE-
-    BOUNDED — the candidate pair relation persists, its distinct doc
-    ids semi-join the documents scan, and only candidate docs pay the
-    shingle build (previously every corpus doc built a distinct-shingle
-    array for a verify that reads only candidates). The two internal
-    persists (cand, sh) are appended to ``caches`` when the caller
-    passes a list, so the caller releases them with its other stage
-    caches (`dedup_ensemble` after the vote; `dedup_winnow` after
-    materializing its result — round-13 ADVICE 4: every caller now
-    passes a list, the orphan caches=None path has no callers)."""
-    rare = (
-        fps.groupBy("fp")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") <= WINNOW_MAX_DF)
-        .select("fp")
-    )
-    f = fps.join(rare, "fp")
-    a, b = f.alias("a"), f.alias("b")
     cand = eager_fill(
-        a.join(b, "fp")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(
-            F.col("a.doc_id").alias("id1"), F.col("b.doc_id").alias("id2")
-        )
+        capped_pairs(fps, "fp", id_col="doc_id", max_df=WINNOW_MAX_DF)
+        .groupBy("id1", "id2")
         .agg(F.count(F.lit(1)).alias("shared"))
         .filter(F.col("shared") >= WINNOW_MIN_SHARED)
         # read by the id-set derivation AND the verify join — eagerly
         # filled so those consumers don't race the fp self-join twice
         .persist()
     )
+    # persist: both verify aliases read the shingle arrays (a doc can
+    # be id1 of one pair and id2 of another). fan_out on the SCAN side
+    # (never on the join plan — `.rdd` on an adaptive join plan can
+    # trigger eager stage execution): the filled `cand` is small, its
+    # ids are broadcast into the scan, and the shingle build would
+    # otherwise run on the scan's split count (one core locally).
+    sh = _candidate_shingles(fan_out(docs), cand).persist()
+    if caches is not None:
+        caches.extend([cand, sh])
+    return _shingle_jaccard(cand, sh)
+
+
+def _candidate_shingles(docs: DataFrame, cand: DataFrame) -> DataFrame:
+    """(doc_id, sh): distinct 3-word-shingle arrays of the documents
+    named in the candidate pairs `cand` (id1, id2, ...) — the verify
+    input is CANDIDATE-BOUNDED: the distinct candidate ids semi-join the
+    documents scan, so only candidate docs pay the shingle build."""
     cand_ids = (
         cand.select(F.col("id1").alias("doc_id"))
         .unionByName(cand.select(F.col("id2").alias("doc_id")))
         .distinct()
     )
-    # persist: the verify stage reads the shingle relation from BOTH
-    # aliases (x and y) — without this the documents scan + shingle
-    # build evaluates twice, the same multi-consumer re-eval the fps
-    # persist above guards against.
-    # fan_out on the SCAN side (never on the join plan — .rdd on an
-    # adaptive join plan can trigger eager stage execution): the
-    # candidate-bounded shingle build is the CPU cost of the verify
-    # and otherwise runs on the docs scan's split count (one core
-    # locally; no-op at scale).
-    sh = eager_fill(
-        fan_out(docs).join(cand_ids, "doc_id", "semi")
+    return (
+        docs.join(cand_ids, "doc_id", "semi")
         .select("doc_id", F.array_distinct(shingles("text")).alias("sh"))
-        # read by BOTH verify aliases (x and y) — filled once eagerly
-        .persist()
     )
-    if caches is not None:
-        caches.extend([cand, sh])
+
+
+def _shingle_jaccard(cand: DataFrame, sh: DataFrame) -> DataFrame:
+    """(id1, id2, shared, jaccard): the pairs of `cand` (id1, id2,
+    shared) whose whole-document shingle Jaccard over `sh` (doc_id, sh)
+    is at least 0.5, rounded to 4 places — the near-dup verify shared
+    by `dedup_winnow` and `dedup_near_incremental`."""
     x, y = sh.alias("x"), sh.alias("y")
     inter = F.size(F.array_intersect(F.col("x.sh"), F.col("y.sh")))
     union = F.size(F.array_union(F.col("x.sh"), F.col("y.sh")))
@@ -1421,7 +1408,6 @@ def dedup_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     # measured the three extra fill jobs as a net cost (1.22x).
     # Persisted here, not by the pair kernel, so this function can
     # release them once the votes are materialized.
-    fps = spine["winnow_fps"].persist(StorageLevel.DISK_ONLY)
     mh_sigs = spine["minhash_sigs"].persist(StorageLevel.DISK_ONLY)
     mh = (
         lsh_candidate_pairs(mh_sigs)
@@ -1436,7 +1422,7 @@ def dedup_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     wn_caches: list[DataFrame] = []
     wn = (
-        _winnow_verified_pairs(docs, fps, caches=wn_caches)
+        _winnow_verified_pairs(docs, spine["winnow_fps"], caches=wn_caches)
         .select("id1", "id2")
         .withColumn("in_winnow", F.lit(1).cast("long"))
     )
@@ -1477,7 +1463,6 @@ def dedup_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist()
     )
     votes.count()  # materialize, then release the internal caches
-    fps.unpersist()
     mh_sigs.unpersist()
     sim_sigs.unpersist()
     for c in wn_caches:  # the winnow verify's cand/shingle persists
@@ -1535,58 +1520,65 @@ def dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hash folds every character (the earlier len/first/last sample
     collided on real word pairs and could inflate run lengths).
 
-    Shape: positioned gram hashes (`gram_rel`, zero-shuffle) → df-cap →
-    gram equi-join (bucketed, fan-out ≤ df per gram) → the classic
+    Shape: positioned gram hashes (`gram_rel`, zero-shuffle) →
+    `lsh.capped_pairs` (df-capped gram equi-join, fan-out ≤ df per
+    gram; contract in ARCHITECTURE.md, "Dedup") → the classic
     diagonal trick: a shared run of consecutive grams lands on one
     (id1, id2, p1 − p2) diagonal, where islands of consecutive p1
     (p1 − row_number per diagonal) have length = run length. One
-    window over (pair, diagonal) — state bounded by matches per pair —
-    then a pair-level max. Emits max_shared_words = longest shared
+    window over (pair, diagonal) — state bounded by matches per pair
+    (`substring_islands`) — then a pair-level max over the islands of
+    ≥ SUBSTR_MIN_RUN grams (a pair's max reaches the threshold iff one
+    of its islands does). Emits max_shared_words = longest shared
     word run. At 100 TB every stage is a keyed shuffle; no all-pairs,
     no suffix array materialization (the trade: only runs whose grams
     survive the df-cap are seen — exact-dup text shared by > df docs
     is the EXACT-dedup family's job)."""
-    from pyspark.sql.window import Window
-
-    from piper_spark.functions.text import gram_rel
-
-    # Spread before the positioned-gram fold (see dedup_winnow), and
-    # persist: the df-cap aggregate + both self-join aliases read it
-    # (no eager fill: the r15 A/B measured it a net cost here — the
-    # local block locks already serialize the race).
-    v = gram_rel(
+    islands = substring_islands(
         table(spark, sf_dir, "documents").repartition(
             spark.sparkContext.defaultParallelism
         )
-    ).persist()
-    rare = (
-        v.groupBy("g")
-        .agg(F.countDistinct("doc_id").alias("df"))
-        .filter(F.col("df") <= SUBSTR_MAX_DF)
-        .select("g")
     )
-    vr = v.join(rare, "g")
-    a, b = vr.alias("a"), vr.alias("b")
-    m = (
-        a.join(b, "g")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("id1"),
-            F.col("b.doc_id").alias("id2"),
-            F.col("a.pos").alias("p1"),
-            (F.col("a.pos") - F.col("b.pos")).alias("diag"),
-        )
+    return islands.groupBy("id1", "id2").agg(
+        (F.max("run_len") + 2).cast("long").alias("max_shared_words")
+    )
+
+
+def substring_islands(d: DataFrame) -> DataFrame:
+    """(id1, id2, diag, run_len, p1_lo, p1_hi): every shared run of
+    >= SUBSTR_MIN_RUN consecutive 3-grams between two documents of the
+    (doc_id, text) relation `d`, with its extent on id1's positions —
+    the diagonal-island stage of `dedup_substring` and
+    `text.substring_clean_rel`.
+
+    Gram matches come from `lsh.capped_pairs` over the positioned gram
+    relation (df counted in distinct docs, cap SUBSTR_MAX_DF; contract
+    in ARCHITECTURE.md, "Dedup"). A run of consecutive grams lands on
+    one (id1, id2, p1 − p2) diagonal, where p1 − row_number is constant:
+    one window keyed by (pair, diagonal), state bounded by the matches
+    of one pair."""
+    from piper_spark.functions.lsh import capped_pairs
+    from piper_spark.functions.text import gram_rel
+
+    m = capped_pairs(
+        gram_rel(d), "g", id_col="doc_id", max_df=SUBSTR_MAX_DF, keep=("pos",)
+    ).select(
+        "id1",
+        "id2",
+        F.col("pos1").alias("p1"),
+        (F.col("pos1") - F.col("pos2")).alias("diag"),
     )
     win = Window.partitionBy("id1", "id2", "diag").orderBy("p1")
-    runs = m.select(
-        "id1", "id2", "diag", (F.col("p1") - F.row_number().over(win)).alias("island")
-    )
     return (
-        runs.groupBy("id1", "id2", "diag", "island")
-        .agg(F.count(F.lit(1)).alias("run_len"))
-        .groupBy("id1", "id2")
-        .agg((F.max("run_len") + 2).cast("long").alias("max_shared_words"))
-        .filter(F.col("max_shared_words") >= SUBSTR_MIN_RUN + 2)
+        m.withColumn("island", F.col("p1") - F.row_number().over(win))
+        .groupBy("id1", "id2", "diag", "island")
+        .agg(
+            F.count(F.lit(1)).alias("run_len"),
+            F.min("p1").alias("p1_lo"),
+            F.max("p1").alias("p1_hi"),
+        )
+        .filter(F.col("run_len") >= SUBSTR_MIN_RUN)
+        .drop("island")
     )
 
 
@@ -1721,54 +1713,40 @@ def dedup_near_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     is touched only through its index and the ID-keyed shingle lookup
     of matched candidates. Batch-internal duplicates are deliberately
     out of scope here — run `dedup_winnow` within the batch for those
-    (both halves compose into the ingest pipeline)."""
+    (both halves compose into the ingest pipeline). The probe is the
+    `probe` form of `lsh.capped_pairs` (ARCHITECTURE.md, "Dedup")."""
+    from piper_spark.functions.lsh import capped_pairs
     from piper_spark.functions.text import winnow_fps
 
-    docs = table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    docs = table(spark, sf_dir, "documents")
     is_batch = (
         F.col("doc_id") % NEAR_INCR_BATCH_MOD == NEAR_INCR_BATCH_RESIDUE
     )
     # One fingerprint pass over everything, split after (the fixture
     # stands in for "index exists + batch fingerprinted on arrival");
-    # persist: the corpus side is read by the df-cap agg AND the join.
+    # persist: the batch (probe) and index sides both read it.
     fps = winnow_fps(docs).persist()
-    cfps = fps.filter(~is_batch)
-    bfps = fps.filter(is_batch)
-    rare = (
-        cfps.groupBy("fp")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") <= WINNOW_MAX_DF)
-        .select("fp")
-    )
-    idx = cfps.join(rare, "fp")
     cand = (
-        bfps.alias("b")
-        .join(idx.alias("c"), "fp")
-        .groupBy(
-            F.col("b.doc_id").alias("batch_id"),
-            F.col("c.doc_id").alias("corpus_id"),
+        capped_pairs(
+            fps.filter(~is_batch),
+            "fp",
+            id_col="doc_id",
+            max_df=WINNOW_MAX_DF,
+            probe=fps.filter(is_batch),
         )
+        .groupBy("id1", "id2")
         .agg(F.count(F.lit(1)).alias("shared"))
         .filter(F.col("shared") >= WINNOW_MIN_SHARED)
+        # read by the id-set derivation AND the verify join
+        .persist()
     )
-    # persist: the verify stage reads the shingle relation from both
-    # aliases (the dedup_winnow rule; caller owns the cache).
-    sh = docs.select(
-        "doc_id", F.array_distinct(shingles("text")).alias("sh")
-    ).persist()
-    x, y = sh.alias("x"), sh.alias("y")
-    inter = F.size(F.array_intersect(F.col("x.sh"), F.col("y.sh")))
-    union = F.size(F.array_union(F.col("x.sh"), F.col("y.sh")))
-    jac = inter.cast("double") / union
-    return (
-        cand.join(x, F.col("x.doc_id") == F.col("batch_id"))
-        .join(y, F.col("y.doc_id") == F.col("corpus_id"))
-        .filter(jac >= 0.5)
-        .select(
-            "batch_id", "corpus_id", "shared", F.round(jac, 4).alias("jaccard")
-        )
+    # No persist for the shingle arrays: with `cand` a cache, both
+    # verify aliases plan the same subtree and read one exchange of it.
+    return _shingle_jaccard(cand, _candidate_shingles(docs, cand)).select(
+        F.col("id1").alias("batch_id"),
+        F.col("id2").alias("corpus_id"),
+        "shared",
+        "jaccard",
     )
 
 
@@ -2231,10 +2209,10 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole-document coverage.
 
     Shape (the `dedup_winnow` candidates-then-verify discipline):
-    zero-shuffle shingling → df-cap the exploded shingle relation (one
-    hash agg; stop-shingle buckets never join) → self equi-join ON
-    shingle (bucketed; fan-out ≤ C(CONTAIN_MAX_DF, 2) per shingle) →
-    DISTINCT pair candidates → exact containment verify via two
+    zero-shuffle shingling → `lsh.capped_pairs` over the exploded
+    shingle relation (df-capped self equi-join ON shingle; fan-out
+    ≤ C(CONTAIN_MAX_DF, 2) per shingle; contract in ARCHITECTURE.md,
+    "Dedup") → DISTINCT pair candidates → exact containment verify via two
     id-keyed joins back to the per-doc shingle arrays. Every stage is
     a keyed shuffle; the only pairs not seen are those ALL of whose
     shared shingles exceed the df-cap — by then the text is corpus-
@@ -2253,43 +2231,29 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     rule — a partial window is not a shingle; the string form padded
     one), so sub-shingle docs can no longer pair. Bit-equality vs the
     string-shingle form on the fixture is pinned in tests."""
+    from piper_spark.functions.lsh import capped_pairs
     from piper_spark.functions.text import gram_hash_col, text_word_hash_udf
 
     docs = table(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism
     )
-    # persist: the exploded relation feeds the df-cap agg AND both join
-    # aliases; the shingle arrays feed the verify from both sides
-    # (caller owns both cache lifetimes — the dedup_winnow lesson).
     hwrel = docs.select(
         "doc_id", text_word_hash_udf()(F.col("text")).alias("hw")
     )
-    # persist both: sh feeds the explode AND both verify aliases; x
-    # feeds the df-cap agg AND both candidate-join aliases (no eager
-    # fill — measured a net cost in the r15 A/B).
+    # persist: the shingle arrays feed the explode AND both verify
+    # aliases (caller owns the cache lifetime).
     sh = hwrel.select(
         "doc_id",
         F.array_distinct(gram_hash_col(F.col("hw"), n=SHINGLE_SIZE)).alias(
             "sh"
         ),
     ).persist()
-    x = sh.select("doc_id", F.explode("sh").alias("g")).persist()
-    rare = (
-        x.groupBy("g")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") <= CONTAIN_MAX_DF)
-        .select("g")
-    )
-    xr = x.join(rare, "g")
-    a, b = xr.alias("a"), xr.alias("b")
-    cand = (
-        a.join(b, "g")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("id1"), F.col("b.doc_id").alias("id2")
-        )
-        .distinct()
-    )
+    cand = capped_pairs(
+        sh.select("doc_id", F.explode("sh").alias("g")),
+        "g",
+        id_col="doc_id",
+        max_df=CONTAIN_MAX_DF,
+    ).distinct()
     sa, sb = sh.alias("sa"), sh.alias("sb")
     shared = F.size(F.array_intersect(F.col("sa.sh"), F.col("sb.sh"))).cast(
         "long"

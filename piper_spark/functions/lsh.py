@@ -56,7 +56,7 @@ from collections.abc import Callable, Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -198,6 +198,61 @@ def banded_pairs(
         "id1", "id2", *[f"{k}{sfx}" for sfx in "12" for k in keep]
     )
     return pairs.distinct() if len(bands) > 1 or probes is not None else pairs
+
+
+def capped_pairs(
+    rel: DataFrame,
+    key: str,
+    *,
+    id_col: str,
+    max_df: int,
+    keep: Sequence[str] = (),
+    probe: DataFrame | None = None,
+) -> DataFrame:
+    """Df-capped posting-list self-join: (id1 < id2) pairs of rows of
+    `rel` that share a `key` value held by at most `max_df` distinct
+    ids. The ONE kernel behind the gram/fingerprint/shingle candidate
+    stages (winnow, substring, containment, incremental near-dup,
+    substring removal); contract in ARCHITECTURE.md ("Dedup").
+
+    The cap is a ``dense_rank`` over (key, id) filtered to
+    ``max_df + 1`` — planned as a map-side ``WindowGroupLimit``, so a
+    stop-gram ships at most ``max_df + 1`` ids per map partition — then
+    the rank's per-key max must be ``<= max_df``. Both join sides read
+    that one shuffle (exchange reuse), so `rel` is read once without a
+    persist. With `probe` (a relation with `rel`'s columns), the probe
+    rows join the capped `rel` instead: id1 is the probe id, id2 the
+    `rel` id, no ordering filter, df counted on `rel` only.
+
+    Returns (id1, id2, <keep>1..., <keep>2...).
+    """
+    by_key = Window.partitionBy(key)
+    capped = (
+        rel.withColumn("_rank", F.dense_rank().over(by_key.orderBy(id_col)))
+        .filter(F.col("_rank") <= max_df + 1)
+        .withColumn("_df", F.max("_rank").over(by_key))
+        .filter(F.col("_df") <= max_df)
+    )
+
+    def side(r: DataFrame, sfx: str) -> DataFrame:
+        return r.select(
+            key,
+            F.col(id_col).alias(f"id{sfx}"),
+            *[F.col(k).alias(f"{k}{sfx}") for k in keep],
+        )
+
+    if probe is None:
+        # merge: both sides already sit hash-partitioned and sorted on
+        # (key, id) after the windows, so a sort-merge join adds no
+        # exchange or sort, where a size-estimated broadcast would
+        # collect one corpus-scaled side to the driver.
+        pairs = side(capped, "1").join(side(capped, "2").hint("merge"), key)
+        pairs = pairs.filter(F.col("id1") < F.col("id2"))
+    else:
+        pairs = side(probe, "1").join(side(capped, "2"), key)
+    return pairs.select(
+        "id1", "id2", *[f"{k}{sfx}" for sfx in "12" for k in keep]
+    )
 
 
 def _planes(n_planes: int) -> np.ndarray:

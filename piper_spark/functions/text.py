@@ -23,7 +23,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from piper_spark.registry import register
-from piper_spark.session import eager_fill, fan_out, table
+from piper_spark.session import fan_out, table
 
 #: High-frequency filler words in the synthetic corpus (FIXTURES.md vocab).
 STOPWORDS = ("the", "a")
@@ -1559,56 +1559,21 @@ def substring_clean_rel(d: DataFrame) -> DataFrame:
     idempotence property test can run it on its own output).
 
     Every stage is the keyed-shuffle machinery `dedup_substring`
-    already proved: positioned gram hashes → df-cap → gram equi-join →
-    diagonal islands; then, instead of reporting the pair, each
-    ≥ SUBSTR_MIN_RUN island is converted to the covered word span of
-    the HIGHER doc_id document and stripped with `text_boilerplate`'s
-    order-deterministic rebuild. The gram relation is persisted — the
-    df-cap aggregate and both self-join aliases read it (caller owns
-    the cache lifetime)."""
-    from pyspark.sql.window import Window
-
-    from piper_spark.functions.dedup import SUBSTR_MAX_DF, SUBSTR_MIN_RUN
+    already proved: its diagonal islands (`dedup.substring_islands`,
+    candidates from `lsh.capped_pairs`; contract in ARCHITECTURE.md,
+    "Dedup"); then, instead of reporting the pair, each island is
+    converted to the covered word span of the HIGHER doc_id document
+    and stripped with `text_boilerplate`'s order-deterministic
+    rebuild."""
+    from piper_spark.functions.dedup import substring_islands
 
     spread = d.repartition(d.sparkSession.sparkContext.defaultParallelism)
-    # eager_fill: the df-cap aggregate + both self-join aliases fan in
-    # on this cache in one action — filled once instead of raced 3×
-    # (round 15, VERDICT items 1+6).
-    v = eager_fill(gram_rel(spread).persist())
-    rare = (
-        v.groupBy("g")
-        .agg(F.countDistinct("doc_id").alias("df"))
-        .filter(F.col("df") <= SUBSTR_MAX_DF)
-        .select("g")
-    )
-    vr = v.join(rare, "g")
-    a, b = vr.alias("a"), vr.alias("b")
-    m = (
-        a.join(b, "g")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("id1"),
-            F.col("b.doc_id").alias("id2"),
-            F.col("a.pos").alias("p1"),
-            (F.col("a.pos") - F.col("b.pos")).alias("diag"),
-        )
-    )
-    win = Window.partitionBy("id1", "id2", "diag").orderBy("p1")
-    runs = m.select(
-        "id1", "id2", "diag",
-        "p1",
-        (F.col("p1") - F.row_number().over(win)).alias("island"),
-    )
     # Island → covered word span of the HIGHER doc (p2 = p1 − diag; a
     # 3-gram at p2 covers words p2 .. p2+2, hence the +2 on the end).
-    ext = (
-        runs.groupBy("id1", "id2", "diag", "island")
-        .agg(
-            F.count(F.lit(1)).alias("run_len"),
-            (F.min("p1") - F.col("diag")).alias("s2"),
-            (F.max("p1") - F.col("diag") + 2).alias("e2"),
-        )
-        .filter(F.col("run_len") >= SUBSTR_MIN_RUN)
+    ext = substring_islands(spread).select(
+        "id2",
+        (F.col("p1_lo") - F.col("diag")).alias("s2"),
+        (F.col("p1_hi") - F.col("diag") + 2).alias("e2"),
     )
     # Per-doc covered-position SET (collect_set dedups overlapping
     # island spans — the old row-level distinct + token join without

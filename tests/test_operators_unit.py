@@ -932,3 +932,72 @@ def test_quantiles_bins_contract(spark):
             ), (flag, q, r.binned_q, exact_cents / 100.0, r.bin_w_cents)
         # p50 == the registered median key, bit for bit
         assert got[(flag, "p50")].binned_q == med[flag].binned_median
+
+
+def _capped_brute(rel, max_df, probe=None):
+    """Brute-force `capped_pairs` over (key, id, pos) tuples: keys held
+    by at most max_df distinct ids of `rel` pair their rows, id1 < id2
+    for a self-join, every probe row against `rel` otherwise."""
+    from collections import defaultdict
+
+    posting = defaultdict(list)
+    for k, i, p in rel:
+        posting[k].append((i, p))
+    rare = {
+        k: v for k, v in posting.items() if len({i for i, _ in v}) <= max_df
+    }
+    if probe is None:
+        return sorted(
+            (i1, i2, p1, p2)
+            for v in rare.values()
+            for i1, p1 in v
+            for i2, p2 in v
+            if i1 < i2
+        )
+    return sorted(
+        (i1, i2, p1, p2)
+        for k, i1, p1 in probe
+        for i2, p2 in rare.get(k, [])
+    )
+
+
+def test_capped_pairs_matches_brute_force(spark):
+    """`lsh.capped_pairs` on hand-built postings: a key held by exactly
+    max_df ids pairs, one held by max_df + 1 does not; df counts
+    distinct ids, so a doc repeating a key at several positions counts
+    once and yields one pair row per position (keep=("pos",)); the
+    probe form counts df on `rel` only and applies no id ordering; an
+    empty relation gives no pairs."""
+    from piper_spark.functions.lsh import capped_pairs
+
+    max_df = 3
+    rel = (
+        [(10, i, 0) for i in (1, 2, 3)]  # exactly max_df ids
+        + [(20, i, 100) for i in (1, 2, 3, 4)]  # max_df + 1 ids
+        + [(30, 5, 0), (30, 5, 4), (30, 6, 2)]  # doc 5 repeats the key
+        + [(40, 7, p) for p in range(5)] + [(40, 8, 9)]  # 6 rows, 2 ids
+    )
+    probe = [(10, 0, 7), (10, 9, 8), (20, 9, 1), (40, 2, 3), (50, 9, 0)]
+    schema = "g long, doc_id long, pos long"
+
+    def frame(rows):
+        # several partitions, so the map-side partial limit sees each
+        # key's ids split across them
+        return spark.createDataFrame(rows, schema).repartition(3)
+
+    def run(r, p=None):
+        out = capped_pairs(
+            frame(r), "g", id_col="doc_id", max_df=max_df, keep=("pos",),
+            probe=None if p is None else frame(p),
+        )
+        assert out.columns == ["id1", "id2", "pos1", "pos2"]
+        return sorted(tuple(x) for x in out.collect())
+
+    got = run(rel)
+    assert got == _capped_brute(rel, max_df)
+    assert (5, 6, 0, 2) in got and (5, 6, 4, 2) in got
+    assert not any(p1 == 100 for _, _, p1, _ in got)  # key 20 is capped out
+    got = run(rel, probe)
+    assert got == _capped_brute(rel, max_df, probe)
+    assert (9, 1, 8, 0) in got and (0, 1, 7, 0) in got
+    assert run([]) == [] and run([], probe) == []

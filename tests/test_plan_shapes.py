@@ -466,12 +466,26 @@ def test_text_substring_clean_is_keyed_end_to_end(spark):
     candidates come from an equi-join (never cartesian), islands run
     under (pair, diagonal)-keyed windows, and the rebuild joins on
     (doc_id, pos) — no global sort, no corpus-wide window."""
+    import re
+
+    from piper_spark.functions.dedup import SUBSTR_MAX_DF
+
     plan = plan_of(spark, "text_substring_clean")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     for line in plan.splitlines():
         if "windowspecdefinition" in line.lower():
-            assert "id1#" in line or "id2#" in line, line
+            if "id1#" in line or "id2#" in line:
+                continue
+            # The gram df-cap of `lsh.capped_pairs`: partitioned on the
+            # gram alone, and bounded by a map-side WindowGroupLimit.
+            part = re.search(r"\], \[([^\]]*)\]", line)
+            assert part and re.fullmatch(r"g#\d+L?", part.group(1)), line
+            limit = (
+                rf"WindowGroupLimit \[{re.escape(part.group(1))}\], .*, "
+                rf"{SUBSTR_MAX_DF + 1}, "
+            )
+            assert re.search(limit, plan), line
 
 
 def test_video_fingerprint_is_shuffle_free_codegen(spark):
@@ -983,15 +997,29 @@ def _children(node):
     return [ch.apply(i) for i in range(ch.size())]
 
 
-def _nodes(node, into_cache: bool):
+def _nodes(node, into_cache: bool, seen: set | None = None):
     """Every node under `node`; with `into_cache`, also the plans that
-    fill the InMemoryRelations it scans."""
+    fill the InMemoryRelations it scans. With a `seen` set (of cache
+    identities), each cache's plan is entered once and a ReusedExchange
+    is a leaf, so a node is visited once per evaluation."""
     yield node
     kids = _children(node)
+    if seen is not None and node.nodeName() == "ReusedExchange":
+        kids = []
     if into_cache and node.nodeName() == "InMemoryTableScan":
-        kids.append(node.relation().cachedPlan())
+        key = _ident(node.relation().cacheBuilder())
+        if seen is None or key not in seen:
+            kids.append(node.relation().cachedPlan())
+        if seen is not None:
+            seen.add(key)
     for k in kids:
-        yield from _nodes(k, into_cache)
+        yield from _nodes(k, into_cache, seen)
+
+
+def _ident(obj) -> int:
+    from pyspark import SparkContext
+
+    return SparkContext._jvm.System.identityHashCode(obj)
 
 
 @pytest.mark.parametrize("name", list(BANDED_CALLERS))
@@ -1042,3 +1070,70 @@ def test_banded_pairs_callers_join_on_band_over_persisted_signatures(spark, name
         py = {ident(n) for n in _nodes(join, into_cache=True)
               if n.nodeName() in _PY_NODES}
         assert len(py) <= 1, f"{len(py)} signature Python passes"
+
+
+#: Every caller of the df-capped posting-list kernel (`lsh.capped_pairs`)
+#: and the gram column its candidate join is keyed on.
+CAPPED_CALLERS = {
+    "dedup_winnow": "fp",
+    "dedup_ensemble": "fp",
+    "pipeline_near_dedup": "fp",
+    "dedup_near_incremental": "fp",
+    "dedup_substring": "g",
+    "text_substring_clean": "g",
+    "dedup_containment": "g",
+}
+
+
+@pytest.mark.parametrize("name", list(CAPPED_CALLERS))
+def test_capped_pairs_callers_cap_map_side_and_hash_grams_once(
+    spark, name, monkeypatch
+):
+    """Each kernel caller proposes candidates from an equi-join on the
+    gram column; under that join the df-cap is a `WindowGroupLimit`
+    (a stop-gram ships at most max_df + 1 ids per map partition); and
+    the Python pass that hashes the grams is evaluated once — both
+    join sides read one shuffle (ReusedExchange) or one cache."""
+    spark.catalog.clearCache()
+    if name == "pipeline_near_dedup":
+        # connected_components cuts its edges' lineage, so the final
+        # plan no longer shows the pair stage: inspect the winnow pairs
+        # the pipeline builds.
+        from piper_spark.functions import dedup
+
+        built = []
+        winnow = dedup.dedup_winnow
+
+        def capture(*args):
+            built.append(winnow(*args))
+            return built[-1]
+
+        monkeypatch.setattr(dedup, "dedup_winnow", capture)
+        registry.all_queries()[name](spark, SF_SMOKE)
+        df = built[0]
+    else:
+        df = registry.all_queries()[name](spark, SF_SMOKE)
+    root = df._jdf.queryExecution().executedPlan()
+    nodes = list(_nodes(root, into_cache=True, seen=set()))
+    names = [n.nodeName() for n in nodes]
+    plan = root.toString()
+    for frag in ("Cartesian", "BroadcastNestedLoop", "BatchEvalPython"):
+        assert frag not in plan, frag
+        assert not any(frag in n for n in names), frag
+
+    key = CAPPED_CALLERS[name] + "#"
+    gram_joins = []
+    for node in nodes:
+        if node.nodeName() in _JOINS:
+            keys = node.leftKeys()
+            if any(keys.apply(i).toString().startswith(key)
+                   for i in range(keys.size())):
+                gram_joins.append(node)
+    assert gram_joins, f"no equi-join on {key}"
+    for join in gram_joins:
+        assert any(n.nodeName() == "WindowGroupLimit"
+                   for n in _nodes(join, into_cache=False, seen=set())), (
+            "df-cap is not a WindowGroupLimit under the gram join"
+        )
+    py = [n for n in names if n in _PY_NODES]
+    assert len(py) == 1, f"{len(py)} gram Python passes"
