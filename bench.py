@@ -1,4 +1,12 @@
-"""Benchmark harness — times every registered query at $SPARK_GRAFT_SF_DIR.
+"""Benchmark harness — times registered queries at $SPARK_GRAFT_SF_DIR.
+
+Usage: python bench.py [--keys K ...]
+  --keys K ...               warm up and time only these registry keys
+  SPARK_GRAFT_SF_DIR=<dir>   input tables (default: the sf0.1 test data)
+  SPARK_GRAFT_BENCH_PINS=<tag>
+                             three timed passes (forward, reverse,
+                             forward) written to
+                             BENCH_PIN_<tag>_run{1,2,3}.json
 
 Prints TWO JSON lines (truncation-proof for tail-capture harnesses):
   line 1 (detail): {"metric": "...", "value": <total sec>, "unit": "sec",
@@ -9,25 +17,30 @@ Prints TWO JSON lines (truncation-proof for tail-capture harnesses):
                     "sf": <sf>, "n_queries": N, "queries_file":
                     "BENCH_DETAIL.json", "slowest": {top 5},
                     "failed": [q, ...]}
-The full per-query map is also written to BENCH_DETAIL.json next to this
-script, so the headline total survives even if stdout is clipped.
+The detail line is also written to BENCH_DETAIL.json next to this
+script, with every key's layer records under "layers": one record per
+timed pass, in pass order (see `run_key`).
 A query that raises is named with its error on stderr, listed under
 "failed" and left out of "queries" and the total; the run carries on.
 
 Each query is executed end-to-end into a noop sink (full compute, no
-driver-side materialization cost). A tiny warm-up query absorbs JVM/
-codegen start-up so per-query numbers reflect steady-state throughput.
+driver-side materialization cost). A warm-up pass at sf0.001 absorbs
+JVM/codegen start-up so per-query numbers reflect steady-state
+throughput.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
 
+from perfbench.spans import SparkProbe
 from piper_spark import registry
 from piper_spark.session import get_spark
 
@@ -39,9 +52,11 @@ def run_to_noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def _report_failure(phase: str, name: str, err: Exception) -> None:
+def _report_failure(phase: str, name: str, err: Exception) -> str:
     first = (str(err).strip().splitlines() or [""])[0][:300]
-    print(f"bench: {phase} {name} failed: {type(err).__name__}: {first}", file=sys.stderr)
+    msg = f"{type(err).__name__}: {first}"
+    print(f"bench: {phase} {name} failed: {msg}", file=sys.stderr)
+    return msg
 
 
 def warm_up(spark, queries, warm_dir: str) -> None:
@@ -56,22 +71,61 @@ def warm_up(spark, queries, warm_dir: str) -> None:
             _report_failure("warm-up", name, e)
 
 
+def run_key(spark, probe: SparkProbe, name: str, fn, sf_dir: str) -> dict:
+    """One timed execution of `name` and its layer record.
+
+    The record holds `wall` = `build_s` (the `fn` call: plan
+    construction plus any job it fires) + `action_s` (the noop write),
+    `error` (None when the key ran), and the probe's counters under its
+    own names: `build_jobs`, `exec.*` (the action's jobs, stages, tasks
+    and stage metrics), `udfs.*` (Python nodes; `init_ms` is worker
+    setup, reported apart from run time) and `cache.*`. Jobs are
+    grouped as `<key>:build` / `<key>:action`. The probe's reads and
+    the `clearCache()` that follows the key sit outside `wall`."""
+    sc = spark.sparkContext
+    rec: dict = {"wall": None, "build_s": None, "action_s": None, "error": None}
+    probe.begin(name)
+    try:
+        sc.setJobGroup(f"{name}:build", name)
+        t0 = time.perf_counter()
+        df = fn(spark, sf_dir)
+        build_s = time.perf_counter() - t0
+        rec["build_s"] = round(build_s, 3)
+        probe.sample()
+        sc.setJobGroup(f"{name}:action", name)
+        t0 = time.perf_counter()
+        run_to_noop(df)
+        action_s = time.perf_counter() - t0
+        rec["action_s"] = round(action_s, 3)
+        rec["wall"] = round(build_s + action_s, 3)
+        probe.sample()
+    except Exception as e:  # noqa: BLE001 — one key must not stop the bench
+        rec["error"] = _report_failure("timed", name, e)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    spark.catalog.clearCache()
+    rec.update({k: round(v, 3) for k, v in sorted(probe.end(name).items())})
+    return rec
+
+
 def timed_pass(
-    spark, queries, sf_dir: str, reverse: bool, failed: set[str]
+    spark, queries, sf_dir: str, reverse: bool, failed: set[str],
+    layers: dict[str, list[dict]] | None = None,
 ) -> dict[str, float]:
-    """One timed pass in key order (reversed on request). A key that
-    raises is named on stderr, added to `failed` and left out of the
-    returned timings; the pass carries on."""
+    """One timed pass in key order (reversed on request); returns the
+    walls of the keys that ran. A key that raises is added to `failed`
+    and left out of the timings; the pass carries on. Each key's record
+    is appended to `layers[key]` when `layers` is given."""
+    probe = SparkProbe(spark)
     t: dict[str, float] = {}
     for name, fn in sorted(queries.items(), reverse=reverse):
-        t0 = time.perf_counter()
-        try:
-            run_to_noop(fn(spark, sf_dir))
-            t[name] = round(time.perf_counter() - t0, 3)
-        except Exception as e:  # noqa: BLE001 — one key must not stop the bench
-            _report_failure("timed", name, e)
+        rec = run_key(spark, probe, name, fn, sf_dir)
+        if layers is not None:
+            layers.setdefault(name, []).append(rec)
+        if rec["error"] is None:
+            t[name] = rec["wall"]
+        else:
             failed.add(name)
-        spark.catalog.clearCache()
     return t
 
 
@@ -105,13 +159,24 @@ def summary_lines(
     return detail, compact
 
 
-def main() -> None:
+def main(argv: list[str] | None = None) -> None:
+    parser = argparse.ArgumentParser(description="Time registered queries.")
+    parser.add_argument(
+        "--keys", nargs="+", metavar="K",
+        help="warm up and time only these registry keys",
+    )
+    args = parser.parse_args(argv)
+    queries = registry.all_queries()
+    if args.keys:
+        unknown = sorted(set(args.keys) - set(queries))
+        if unknown:
+            parser.error(f"unknown keys: {' '.join(unknown)}")
+        queries = {k: queries[k] for k in args.keys}
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_spark("piper_spark_bench")
     spark.sparkContext.setLogLevel("ERROR")
-
-    queries = registry.all_queries()
 
     warm_dir = "/root/testdata/sf0.001"
     warm_up(spark, queries, warm_dir)
@@ -158,36 +223,32 @@ def main() -> None:
     # session noise (cache/GC inheritance, JIT warmth), not a plan
     # change, and a median absorbs it. The printed/BENCH_DETAIL numbers
     # stay the first forward pass, comparable with prior rounds.
-    # Without the tag, SPARK_GRAFT_BENCH_ORDER=reverse still flips the
-    # single pass (the old manual two-invocation dance).
     pins_tag = os.environ.get("SPARK_GRAFT_BENCH_PINS")
-    here = os.path.dirname(os.path.abspath(__file__))
     failed: set[str] = set()
+    layers: dict[str, list[dict]] = {}
+    timings = timed_pass(spark, queries, sf_dir, False, failed, layers)
     if pins_tag:
-        timings = timed_pass(spark, queries, sf_dir, False, failed)
-        rev = timed_pass(spark, queries, sf_dir, True, failed)
-        fwd2 = timed_pass(spark, queries, sf_dir, False, failed)
+        rev = timed_pass(spark, queries, sf_dir, True, failed, layers)
+        fwd2 = timed_pass(spark, queries, sf_dir, False, failed, layers)
         for run, t, order in (
             (1, timings, "forward"),
             (2, rev, "reverse"),
             (3, fwd2, "forward"),
         ):
             with open(
-                os.path.join(here, f"BENCH_PIN_{pins_tag}_run{run}.json"), "w"
+                os.path.join(HERE, f"BENCH_PIN_{pins_tag}_run{run}.json"), "w"
             ) as fh:
                 json.dump(pin_payload(t, order), fh, indent=1)
                 fh.write("\n")
-    else:
-        reverse = os.environ.get("SPARK_GRAFT_BENCH_ORDER") == "reverse"
-        timings = timed_pass(spark, queries, sf_dir, reverse, failed)
 
     detail, compact = summary_lines(timings, failed, sf_val, calib_sec)
     total = detail["value"]
-    # Durable copy of the per-query map, immune to stdout clipping.
-    detail_path = os.path.join(here, "BENCH_DETAIL.json")
+    # Durable copy of the per-query map, immune to stdout clipping,
+    # plus the layer records (too long for stdout).
+    detail_path = os.path.join(HERE, "BENCH_DETAIL.json")
     try:
         with open(detail_path, "w") as fh:
-            json.dump(detail, fh, indent=1)
+            json.dump({**detail, "layers": layers}, fh, indent=1)
             fh.write("\n")
     except OSError:
         pass

@@ -1534,11 +1534,7 @@ def dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     no suffix array materialization (the trade: only runs whose grams
     survive the df-cap are seen — exact-dup text shared by > df docs
     is the EXACT-dedup family's job)."""
-    islands = substring_islands(
-        table(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism
-        )
-    )
+    islands = substring_islands(fan_out(table(spark, sf_dir, "documents")))
     return islands.groupBy("id1", "id2").agg(
         (F.max("run_len") + 2).cast("long").alias("max_shared_words")
     )
@@ -2234,9 +2230,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     from piper_spark.functions.lsh import capped_pairs
     from piper_spark.functions.text import gram_hash_col, text_word_hash_udf
 
-    docs = table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    docs = fan_out(table(spark, sf_dir, "documents"))
     hwrel = docs.select(
         "doc_id", text_word_hash_udf()(F.col("text")).alias("hw")
     )

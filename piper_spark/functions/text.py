@@ -487,12 +487,10 @@ def text_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from piper_spark.functions.dedup import shingles
 
-    # Repartition the RAW rows, below the shingle projection: an
+    # Spread the RAW rows, below the shingle projection: an
     # exchange above it would ship pre-computed shingle arrays but
     # leave the expensive compute itself on the input's single split.
-    d = table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = fan_out(table(spark, sf_dir, "documents"))
     # Hash every gram to 8 bytes INSIDE the shingle projection: both
     # join sides then carry int64s instead of ~50-byte gram strings, so
     # the broadcast build and the exploded probe shrink ~6×. A 64-bit
@@ -1414,9 +1412,9 @@ def text_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Round-robin spread before the explode-heavy map side (the
     # pipeline_curate pattern): a one-split test input would otherwise
     # run the gram explosion on a single core; at real scale the
-    # input's own splits make this shuffle noise next to the work.
+    # input's own splits do this and fan_out adds no shuffle.
     base = table(spark, sf_dir, "documents")
-    d = base.repartition(spark.sparkContext.defaultParallelism)
+    d = fan_out(base)
     w = words_col()
     n5 = F.greatest(F.size(w) - (BOILER_N - 1), F.lit(0))
     gram5 = F.transform(
@@ -1567,7 +1565,7 @@ def substring_clean_rel(d: DataFrame) -> DataFrame:
     rebuild."""
     from piper_spark.functions.dedup import substring_islands
 
-    spread = d.repartition(d.sparkSession.sparkContext.defaultParallelism)
+    spread = fan_out(d)
     # Island → covered word span of the HIGHER doc (p2 = p1 − diag; a
     # 3-gram at p2 covers words p2 .. p2+2, hence the +2 on the end).
     ext = substring_islands(spread).select(
@@ -1732,7 +1730,7 @@ def text_boilerplate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     overlap). Real corpora with physical newlines swap the chunker for
     split(text, '\\n') — every stage downstream is unchanged."""
     base = table(spark, sf_dir, "documents")
-    d = base.repartition(spark.sparkContext.defaultParallelism)
+    d = fan_out(base)
     t = d.select("doc_id", words_col().alias("ws"))
     ws = F.col("ws")
     nl = F.expr(f"(size(ws) + {LINE_WORDS - 1}) div {LINE_WORDS}")
@@ -2085,7 +2083,7 @@ def text_self_repeat(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage is keyed by doc_id — embarrassingly parallel over the scan,
     window state bounded by matches per diagonal."""
     base = table(spark, sf_dir, "documents")
-    docs = base.repartition(spark.sparkContext.defaultParallelism)
+    docs = fan_out(base)
     # persist: occurrence-cap agg + both self-join aliases read it
     # (no eager fill — measured a net cost in the r15 A/B).
     v = gram_rel(docs).persist()
@@ -2514,43 +2512,34 @@ def text_dup_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape: the spine's hashed gram relation (one Arrow word-hash pass +
     the shared JVM gram fold, distinct per doc) → ONE gram-keyed count
-    aggregate (the df relation — map-side combined, 8-byte keys) → join
-    back → per-doc counts; docs with < 3 words surface (0, 0, 0.0) via
-    the left join in both engines. Everything is integer until one
+    window (the df, 8-byte keys) → per-doc counts; docs with < 3 words
+    surface (0, 0, 0.0) via the left join in both engines. Everything is integer until one
     final divide rounded at 4 (the `dedup_jaccard` ratio precedent).
     At 100 TB both shuffles are keyed by 8-byte gram hashes — the
     `dedup_substring` profile without the positional windows."""
-    docs = table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    from pyspark.sql import Window
+
+    docs = fan_out(table(spark, sf_dir, "documents"))
     hwrel = docs.select(
         "doc_id", text_word_hash_udf()(F.col("text")).alias("hw")
     )
-    # persist: the df aggregate AND the join-back read the same
-    # distinct (doc_id, g) relation; released below once the (narrow,
-    # 4-column) result is materialized — the sim_knn_join pattern
-    # (round-13 ADVICE 4: the caller never receives dg, so "caller owns
-    # the lifetime" was an orphan cache).
+    # (doc_id, g) is distinct per doc, so a count over the gram's
+    # partition is its df: one gram-keyed shuffle, no join back.
     dg = hwrel.select(
         "doc_id",
         F.explode(F.array_distinct(gram_hash_col(F.col("hw")))).alias("g"),
-    ).persist()
-    gdf = dg.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
-    per = (
-        dg.join(gdf, "g")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_grams"),
-            F.sum(
-                F.when(F.col("df") >= 2, F.lit(1)).otherwise(F.lit(0))
-            ).alias("dup_grams"),
-        )
+    ).withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("g")))
+    per = dg.groupBy("doc_id").agg(
+        F.count(F.lit(1)).alias("n_grams"),
+        F.sum(F.when(F.col("df") >= 2, F.lit(1)).otherwise(F.lit(0))).alias(
+            "dup_grams"
+        ),
     )
     frac = F.when(
         F.col("n_grams") > 0,
         F.col("dup_grams").cast("double") / F.col("n_grams"),
     ).otherwise(F.lit(0.0))
-    out = (
+    return (
         docs.select("doc_id")
         .join(per, "doc_id", "left")
         .select(
@@ -2559,8 +2548,4 @@ def text_dup_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("dup_grams", F.lit(0)).cast("long").alias("dup_grams"),
             F.round(frac, 4).alias("dup_frac"),
         )
-        .persist()
     )
-    out.count()  # materialize, then release the corpus-sized gram cache
-    dg.unpersist()
-    return out

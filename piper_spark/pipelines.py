@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from piper_spark.functions.dedup import lsh_candidate_pairs, minhash_signatures
 from piper_spark.functions.graphs import connected_components
 from piper_spark.registry import register
-from piper_spark.session import eager_fill, table
+from piper_spark.session import eager_fill, fan_out, table
 from piper_spark.sources.sinks import write_partitioned
 
 
@@ -286,10 +286,8 @@ def pipeline_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # as one parquet split, which would serialize every per-row gate
     # fold and the shingle hashing on a single task (the same lesson as
     # text_decontam / spread_for_decode — at real scale the input's own
-    # splits provide this parallelism and the exchange is a no-op).
-    d = table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    # splits provide this parallelism and fan_out adds no exchange).
+    d = fan_out(table(spark, sf_dir, "documents"))
     w = words_col()
     n = F.size(w).cast("long")
     nbg = F.greatest(F.size(w) - 1, F.lit(1))

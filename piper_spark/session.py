@@ -80,7 +80,8 @@ def _derived_shuffle_partitions(input_bytes: int, cpus: int) -> int:
     `graph_cc` 2.7 s at 8 vs 6.1 s at 32 — ~10 tiny shuffles per run).
     RE-PINNED round 15 on the current host (VERDICT item 7,
     interleaved median-of-5 over the same key set,
-    `scripts/ab_shuffle_floor.py`, artifact AB_FLOOR_r15.json):
+    `scripts/ab_shuffle_floor.py`, since removed; artifact
+    AB_FLOOR_r15.json):
     totals 8 → 66.0 s, 16 → 69.9 s, 32 → 88.1 s — cpus/4 stands
     (graph_cc again the extreme: 2.06 / 3.20 / 5.85 s).
     The cpus/4 floor keeps reduce stages from serializing outright;

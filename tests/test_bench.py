@@ -1,6 +1,11 @@
-"""bench.py failure handling: a key that raises is reported, not fatal."""
+"""bench.py: a key that raises is reported, not fatal; every key gets a
+layer record; `--keys` limits the run to the keys named."""
 
 from __future__ import annotations
+
+import json
+
+import pytest
 
 import bench
 from tests.conftest import SF_SMOKE
@@ -32,3 +37,84 @@ def test_failing_key_is_named_and_left_out(spark, capsys):
     assert set(detail["queries"]) == {"a_ok", "c_ok"}
     assert detail["value"] == compact["value"] == round(sum(timings.values()), 3)
     assert compact["n_queries"] == 2
+
+
+#: A subset of the probe's metric names (perfbench/spans.py), one per
+#: layer the record carries.
+PROBE_NAMES = {
+    "build_jobs", "exec.jobs", "exec.stages", "exec.tasks", "exec.run_ms",
+    "exec.cpu_ms", "exec.gc_ms", "exec.shuffle_write_bytes",
+    "exec.spill_bytes", "exec.input_bytes", "exec.task_skew", "udfs.nodes",
+    "udfs.init_ms", "udfs.total_ms", "cache.peak_bytes", "cache.blocks_left",
+}
+
+
+def _collects_while_building(spark, sf_dir):
+    n = spark.range(5).count()
+    return spark.range(n).groupBy().count()
+
+
+def test_layer_record_per_key(spark, capsys):
+    queries = {
+        "a_ok": lambda spark, sf_dir: spark.range(3),
+        "b_bad": _boom,
+        "c_collect": _collects_while_building,
+    }
+    failed: set[str] = set()
+    layers: dict[str, list[dict]] = {}
+    timings = bench.timed_pass(spark, queries, SF_SMOKE, False, failed, layers)
+    bench.timed_pass(spark, queries, SF_SMOKE, True, failed, layers)
+    assert set(layers) == set(queries)
+    assert all(len(recs) == 2 for recs in layers.values())
+    assert set(timings) == {"a_ok", "c_collect"}
+    assert failed == {"b_bad"}
+
+    for rec in layers["b_bad"]:
+        assert rec["error"] == "RuntimeError: boom: no such table"
+        assert rec["wall"] is None
+    for name in ("a_ok", "c_collect"):
+        for rec in layers[name]:
+            assert rec["error"] is None
+            assert PROBE_NAMES <= set(rec)
+            assert rec["exec.jobs"] >= 1
+            assert rec["wall"] == pytest.approx(
+                rec["build_s"] + rec["action_s"], abs=2e-3
+            )
+    assert [r["build_jobs"] for r in layers["c_collect"]] == [1, 1]
+    assert [r["build_jobs"] for r in layers["a_ok"]] == [0, 0]
+    assert layers["a_ok"][0]["wall"] == timings["a_ok"]
+    assert "timed b_bad failed: RuntimeError" in capsys.readouterr().err
+
+
+def test_keys_flag_warms_up_and_times_only_those_keys(
+    spark, monkeypatch, tmp_path, capsys
+):
+    calls: list[tuple[str, str]] = []
+
+    def key(name):
+        def fn(spark, sf_dir):
+            calls.append((name, sf_dir))
+            return spark.range(2)
+
+        return fn
+
+    monkeypatch.setattr(
+        bench.registry, "all_queries", lambda: {k: key(k) for k in "xyz"}
+    )
+    monkeypatch.setattr(bench, "get_spark", lambda name: spark)
+    monkeypatch.setattr(bench, "HERE", str(tmp_path))
+    sf_dir = str(tmp_path / "sf0.5")
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", sf_dir)
+    monkeypatch.delenv("SPARK_GRAFT_BENCH_PINS", raising=False)
+    bench.main(["--keys", "z", "x"])
+
+    warm = SF_SMOKE  # bench.py warms up at the smallest scale factor
+    assert calls == [("x", warm), ("z", warm), ("x", sf_dir), ("z", sf_dir)]
+    with open(tmp_path / "BENCH_DETAIL.json") as fh:
+        detail = json.load(fh)
+    assert set(detail["queries"]) == set(detail["layers"]) == {"x", "z"}
+    lines = [json.loads(s) for s in capsys.readouterr().out.splitlines()]
+    assert lines[1]["n_queries"] == 2
+
+    with pytest.raises(SystemExit):
+        bench.main(["--keys", "x", "no_such_key"])

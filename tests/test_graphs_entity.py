@@ -812,6 +812,25 @@ def test_connected_components_plan_does_not_grow_with_rounds(spark):
     assert leaves(11) <= leaves(6)
 
 
+@pytest.mark.xfail(
+    strict=True,
+    reason="the loop releases the local checkpoints its result's lineage "
+    "reads, so a recompute after clearCache() cannot find them; one "
+    "lifetime for caches and checkpoints is ROADMAP item 3",
+)
+def test_connected_components_result_survives_clear_cache(spark):
+    """A returned frame can be re-read after a global `clearCache()`."""
+    from piper_spark.functions.graphs import connected_components
+
+    und = [(i, i + 1) for i in range(6)]
+    edges = spark.createDataFrame(und + [(v, u) for u, v in und], "u long, v long")
+    verts = spark.createDataFrame([(i,) for i in range(7)], "id long")
+    comp = connected_components(edges, verts)
+    assert comp.count() == 7
+    spark.catalog.clearCache()
+    assert comp.count() == 7
+
+
 def _stored_rdds(spark) -> set[int]:
     return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
 

@@ -7,6 +7,8 @@ scale — so a future tuning pass cannot silently reintroduce the
 
 from __future__ import annotations
 
+import pytest
+
 from piper_spark.session import (
     _derived_shuffle_partitions,
     fan_out,
@@ -133,3 +135,69 @@ def test_lloyd_seeds_out_rows_are_lowest_vec_ids(spark):
     assert len(seeds) == len(cents) == 4
     assert all(len(r["xq"]) > 0 for r in seeds)  # rows carry xq
     vecs.unpersist()
+
+
+#: Keys that spread the documents scan before CPU-heavy per-row work.
+_DOC_SPREAD_KEYS = [
+    "dedup_substring",
+    "dedup_containment",
+    "text_decontam",
+    "text_boilerplate",
+    "text_substring_clean",
+    "text_boilerplate_lines",
+    "text_self_repeat",
+    "text_dup_grams",
+    "pipeline_curate",
+]
+
+
+@pytest.fixture(scope="module")
+def many_split_sf(spark, tmp_path_factory):
+    """SF_SMOKE with `documents` rewritten as one file per core, so its
+    scan already has the session's parallelism."""
+    import os
+
+    d = tmp_path_factory.mktemp("sf_many_splits")
+    for f in os.listdir(SF_SMOKE):
+        if f != "documents.parquet":
+            os.symlink(os.path.join(SF_SMOKE, f), d / f)
+    p = spark.sparkContext.defaultParallelism
+    spark.read.parquet(f"{SF_SMOKE}/documents.parquet").repartition(p).write.parquet(
+        str(d / "documents.parquet")
+    )
+    return str(d)
+
+
+def _round_robin_over_scan(plan: str) -> list[str]:
+    """RoundRobin repartition exchanges whose subtree reaches a file scan
+    before any other exchange."""
+
+    def depth(line: str) -> int:
+        return len(line) - len(line.lstrip(" :+-|"))
+
+    lines = plan.splitlines()
+    hits = []
+    for i, line in enumerate(lines):
+        if "RoundRobinPartitioning" not in line or "REPARTITION_BY_NUM" not in line:
+            continue
+        for sub in lines[i + 1 :]:
+            if depth(sub) <= depth(line) or "Exchange" in sub:
+                break
+            if "FileScan parquet" in sub:
+                hits.append(line.strip())
+                break
+    return hits
+
+
+@pytest.mark.parametrize("key", _DOC_SPREAD_KEYS)
+def test_doc_spread_is_noop_on_many_split_input(spark, many_split_sf, key):
+    """The documents scan is spread with `fan_out`: with one split per
+    core already, no round-robin exchange sits on it."""
+    from piper_spark import registry
+
+    assert table(spark, many_split_sf, "documents").rdd.getNumPartitions() >= (
+        spark.sparkContext.defaultParallelism
+    )
+    df = registry.all_queries()[key](spark, many_split_sf)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert not _round_robin_over_scan(plan), plan
