@@ -22,7 +22,9 @@ Scale shape notes live on each operator; the common principle: every
 stage is a keyed equi-join or keyed aggregate on (src|dst|node), never
 all-pairs, and every iterative algorithm, `connected_components`
 included, runs its rounds through one generation loop, `iterate`,
-which owns persistence, plan truncation and release.
+which owns persistence, plan truncation and release.  The exception is
+`graph_cc`'s fixed rounds: each generation has one reader, so they
+build as one lazy query with nothing to persist or truncate.
 """
 
 from __future__ import annotations
@@ -115,12 +117,11 @@ def iterate(
     *,
     readers: int = 1,
     converged: Callable[[DataFrame, DataFrame], bool] | None = None,
-    start: int = 0,
 ) -> DataFrame:
     """The one generation loop: ``gen = step(gen)`` for rounds
-    ``start + 1 .. rounds``, where `gen` is generation ``start`` and
-    `step` builds the next generation lazily.  Returns the final
-    generation, persisted and filled; its lifetime is the caller's.
+    ``1 .. rounds``, where `gen` is generation 0 and `step` builds the
+    next generation lazily.  Returns the final generation, persisted
+    and filled; its lifetime is the caller's.
 
     - With ``readers > 1`` (the step reads its generation twice) every
       generation, the first included unless already cached, is
@@ -153,7 +154,7 @@ def iterate(
     if readers > 1 and not gen.is_cached:
         persist(gen)
     try:
-        for t in range(start + 1, rounds + 1):
+        for t in range(1, rounds + 1):
             prev, gen = gen, step(gen)
             cut = t % PREGEL_CKPT_INTERVAL == 0 and t < rounds
             if converged is not None:
@@ -835,6 +836,27 @@ l{t} AS MATERIALIZED (
   GROUP BY id)"""
 
 
+#: Final labels next to the mid-round ones (both engines).
+_CC_OUT_SQL = f"""
+SELECT a.id AS doc_id,
+       CAST(b.comp AS BIGINT) AS comp_mid,
+       CAST(a.comp AS BIGINT) AS component
+FROM l{CC_ROUNDS} a JOIN l{CC_ROUNDS // 2} b ON b.id = a.id
+"""
+
+#: `graph_cc`'s fixed rounds as one CTE chain over the closed
+#: neighbourhood: label_t(v) = min label_{t-1} over N[v].
+_CC_QUERY = (
+    "WITH nbr AS (SELECT * FROM {nbr}), l0 AS (SELECT id, id AS comp FROM {nodes}),"
+    + ",".join(
+        f"l{t} AS (SELECT n.u AS id, min(p.comp) AS comp FROM nbr n"
+        f" JOIN l{t - 1} p ON p.id = n.v GROUP BY n.u)"
+        for t in range(1, CC_ROUNDS + 1)
+    )
+    + _CC_OUT_SQL
+)
+
+
 @register(
     "graph_cc",
     oracle="WITH "
@@ -844,12 +866,7 @@ l{t} AS MATERIALIZED (
     + """,
 l0 AS (SELECT doc_id AS id, doc_id AS comp FROM documents),"""
     + ",".join(_cc_round_sql(t) for t in range(1, CC_ROUNDS + 1))
-    + f"""
-SELECT a.id AS doc_id,
-       CAST(b.comp AS BIGINT) AS comp_mid,
-       CAST(a.comp AS BIGINT) AS component
-FROM l{CC_ROUNDS} a JOIN l{CC_ROUNDS // 2} b ON b.id = a.id
-""",
+    + _CC_OUT_SQL,
 )
 def graph_cc(
     spark: SparkSession,
@@ -871,46 +888,25 @@ def graph_cc(
     discriminating after the giant component collapses every final
     label to the global min.
 
-    Scale shape: per round ONE fused union+min — the self row unioned
-    with the v-keyed equi-join (labels ⋈ sym edges) into a node-keyed
-    partial-agg min (covers isolated nodes without a second left
-    join; with the 10→7 round cut, measured 9.1 → 4.6 s cold at sf0.1) —
-    the Pregel profile shared with pagerank/LPA.  Each label
-    generation is read twice (join and union), so `iterate` persists
-    it; the rounds run as two `iterate` calls, the first ending at the
-    mid generation, which stays cached for the final join.
-    ``to_fixpoint=True`` is `connected_components` itself, capped at
-    ``max_rounds`` — it raises when the labels have not converged.
+    Scale shape: per round ONE v-keyed equi-join of the previous
+    generation with the closed neighbourhood `nbr` (sym plus a self row
+    per node, so isolated nodes keep their own label) into a
+    node-keyed partial-agg min — the Pregel profile shared with
+    pagerank/LPA.  Each generation has one reader, so all
+    {CC_ROUNDS} rounds build as one lazy query (`_CC_QUERY`): the plan
+    grows by one join + aggregate per round, no round is persisted or
+    truncated, and no job runs before the action.  Catalyst reuses
+    the `nbr` exchange across rounds and reads the mid generation for
+    the final join through a ReusedExchange.  ``to_fixpoint=True`` is
+    `connected_components` itself, capped at ``max_rounds`` — it
+    raises when the labels have not converged.
     """
     sym = undirected(link_edges(spark, sf_dir))
     nodes = table(spark, sf_dir, "documents").select(F.col("doc_id").alias("id"))
     if to_fixpoint:
         return connected_components(sym, nodes, max_iters=max_rounds)
-    sym = sym.persist()
-    sym.count()
-
-    def spread(labels: DataFrame) -> DataFrame:
-        return (
-            sym.join(labels, sym["v"] == labels["id"])
-            .select(F.col("u").alias("id"), F.col("comp"))
-            .unionByName(labels)
-            .groupBy("id")
-            .agg(F.min("comp").alias("comp"))
-        )
-
-    half = CC_ROUNDS // 2
-    mid = iterate(nodes.select("id", F.col("id").alias("comp")), spread, half, readers=2)
-    labels = iterate(mid, spread, CC_ROUNDS, readers=2, start=half)
-    sym.unpersist()
-    return (
-        labels.alias("a")
-        .join(mid.alias("b"), F.col("a.id") == F.col("b.id"))
-        .select(
-            F.col("a.id").alias("doc_id"),
-            F.col("b.comp").cast("long").alias("comp_mid"),
-            F.col("a.comp").cast("long").alias("component"),
-        )
-    )
+    nbr = sym.unionByName(nodes.select(F.col("id").alias("u"), F.col("id").alias("v")))
+    return spark.sql(_CC_QUERY, nbr=nbr, nodes=nodes)
 
 
 def connected_components(

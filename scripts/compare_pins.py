@@ -17,7 +17,8 @@ Prints per-key ratios beyond the threshold in both directions plus the
 common-key totals, and a spread line per flagged key (its min..max
 across runs in each round) so "regression" vs "noise" is decidable
 from the artifact: a key whose new-round spread CONTAINS the old
-median is noise, not a plan change.
+median is tagged noise-suspect, not a plan change, whichever way it
+moved.
 """
 
 from __future__ import annotations
@@ -55,9 +56,10 @@ def spread(runs: list[dict[str, float]], k: str) -> str:
     return f"{min(vals):.2f}..{max(vals):.2f}"
 
 
-def main() -> None:
-    old_tag, new_tag = sys.argv[1], sys.argv[2]
-    thresh = float(sys.argv[3]) if len(sys.argv) > 3 else 1.3
+def main(argv: list[str] | None = None) -> None:
+    args = sys.argv[1:] if argv is None else argv
+    old_tag, new_tag = args[0], args[1]
+    thresh = float(args[2]) if len(args) > 2 else 1.3
     old_runs, new_runs = load_runs(old_tag), load_runs(new_tag)
     old, new = reduce_runs(old_runs), reduce_runs(new_runs)
     common = sorted(set(old) & set(new))
@@ -81,7 +83,7 @@ def main() -> None:
             f"{'REGRESS' if r > 1 else 'improve':7s} {k:28s} "
             f"{old[k]:6.2f} -> {new[k]:6.2f}  ({r:.2f}x)  "
             f"old spread {spread(old_runs, k)}, new spread {spread(new_runs, k)}"
-            f"{'  [spread overlaps old median -> noise-suspect]' if noise and r > 1 else ''}"
+            f"{'  [spread overlaps old median -> noise-suspect]' if noise else ''}"
         )
     only_new = sorted(set(new) - set(old))
     if only_new:

@@ -1,5 +1,6 @@
 """bench.py: a key that raises is reported, not fatal; every key gets a
-layer record; `--keys` limits the run to the keys named."""
+layer record; `--keys` limits the run to the keys named.
+scripts/compare_pins.py: the noise tag reads the same both ways."""
 
 from __future__ import annotations
 
@@ -118,3 +119,35 @@ def test_keys_flag_warms_up_and_times_only_those_keys(
 
     with pytest.raises(SystemExit):
         bench.main(["--keys", "x", "no_such_key"])
+
+
+def test_compare_pins_tags_noise_in_both_directions(monkeypatch, tmp_path, capsys):
+    """A flagged key whose new runs' spread contains the old median is
+    tagged noise-suspect whether it got slower or faster; a key that
+    moved outside that spread is printed bare."""
+    from scripts import compare_pins
+
+    pins = {
+        "old": [{"slow": 1.0, "fast": 1.0, "real": 1.0, "flat": 1.0}] * 3,
+        "new": [
+            {"slow": 1.0, "fast": 0.5, "real": 0.5, "flat": 1.0},
+            {"slow": 2.0, "fast": 0.5, "real": 0.5, "flat": 1.1},
+            {"slow": 2.0, "fast": 1.0, "real": 0.6, "flat": 0.9},
+        ],
+    }
+    for tag, runs in pins.items():
+        for i, queries in enumerate(runs, 1):
+            (tmp_path / f"BENCH_PIN_{tag}_run{i}.json").write_text(
+                json.dumps({"queries": queries})
+            )
+    monkeypatch.setattr(compare_pins, "HERE", str(tmp_path))
+    compare_pins.main(["old", "new", "1.3"])
+
+    lines = {
+        line.split()[1]: line
+        for line in capsys.readouterr().out.splitlines()[1:]
+    }
+    assert set(lines) == {"slow", "fast", "real"}
+    assert lines["slow"].startswith("REGRESS") and "noise-suspect" in lines["slow"]
+    assert lines["fast"].startswith("improve") and "noise-suspect" in lines["fast"]
+    assert lines["real"].startswith("improve") and "noise-suspect" not in lines["real"]

@@ -794,6 +794,35 @@ def test_graph_cc_fixed_rounds_reach_true_components(spark):
         graph_cc(spark, SF_SMOKE, to_fixpoint=True, max_rounds=2)
 
 
+def test_graph_cc_fires_no_job_while_it_builds(spark):
+    """All CC_ROUNDS rounds build as one lazy query: building the frame
+    runs no Spark job; the rounds run in the action."""
+    from piper_spark.functions.graphs import graph_cc
+    from piper_spark.session import table
+
+    table(spark, SF_SMOKE, "documents")  # a table's first read infers its schema
+    sc = spark.sparkContext
+    group = "test_graph_cc:build"
+    sc.setJobGroup(group, "graph_cc build")
+    try:
+        df = graph_cc(spark, SF_SMOKE)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert df.count() > 0
+
+
+def test_graph_cc_result_survives_clear_cache(spark):
+    """graph_cc's frame reads no cache or checkpoint the call made, so
+    it can be re-read after a global `clearCache()`."""
+    from piper_spark.functions.graphs import graph_cc
+
+    df = graph_cc(spark, SF_SMOKE)
+    n = df.count()
+    spark.catalog.clearCache()
+    assert df.count() == n
+
+
 def test_connected_components_plan_does_not_grow_with_rounds(spark):
     """A path of n nodes converges at round n.  Rounds 6 and 11 sit at
     the same offset after a plan truncation, so the returned frame's

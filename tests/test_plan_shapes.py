@@ -818,6 +818,29 @@ def test_graph_lpa_output_reads_cached_final_labels(spark):
     assert "Exchange" not in outer
 
 
+def test_graph_cc_is_one_query_reading_the_mid_round_once(spark):
+    """graph_cc's rounds are one lazy query: no cache and no checkpoint
+    restart, equi-joins only, one min-aggregate per round, and the
+    final join reads the mid round's shuffle through a ReusedExchange
+    instead of running rounds 1..CC_ROUNDS//2 a second time."""
+    from piper_spark.functions.graphs import CC_ROUNDS
+
+    spark.catalog.clearCache()
+    qe = registry.all_queries()["graph_cc"](spark, SF_SMOKE)._jdf.queryExecution()
+    assert "LogicalRDD" not in qe.optimizedPlan().toString()
+    root = qe.executedPlan()
+    plan = root.toString()
+    for node in ("InMemoryRelation", "InMemoryTableScan", "ExistingRDD",
+                 "CartesianProduct", "BroadcastNestedLoopJoin"):
+        assert node not in plan
+    # CC_ROUNDS rounds plus the mid round's final aggregate over the reuse
+    assert plan.count("functions=[min(") == CC_ROUNDS + 1
+    join = next(n for n in _nodes(root, False, set()) if n.nodeName().endswith("Join"))
+    sides = [[n.nodeName() for n in _nodes(c, False, set())] for c in _children(join)]
+    mid = [s for s in sides if not any(name.endswith("Join") for name in s)]
+    assert len(mid) == 1 and "ReusedExchange" in mid[0]
+
+
 def test_embed_pq_is_single_jvm_projection(spark):
     # PQ assignment is one map-side codegen projection: no shuffle, no
     # join, and NO Python crossing (the codebook is parsed literals).
