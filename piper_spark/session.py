@@ -130,6 +130,11 @@ def get_spark(app_name: str = "piper_spark") -> SparkSession:
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # Leave the stage id out of generated class names, so stages
+        # with identical code (graph_cc's seven rounds) share one entry
+        # of the 100-class codegen cache instead of evicting the classes
+        # of other queries, which then recompile in their next action.
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     spark = builder.getOrCreate()
     # The driver may hand us a session it built itself; enforce the two
