@@ -8,15 +8,17 @@ Usage: python bench.py [--keys K ...]
                              forward) written to
                              BENCH_PIN_<tag>_run{1,2,3}.json
 
-Prints TWO JSON lines (truncation-proof for tail-capture harnesses):
+Prints THREE JSON lines (truncation-proof for tail-capture harnesses):
   line 1 (detail): {"metric": "...", "value": <total sec>, "unit": "sec",
                     "queries": {"q": sec, ...}, "sf": <sf>,
                     "failed": [q, ...]}
-  line 2 (compact, printed LAST so a tail capture always retains it):
-                   {"metric": "...", "value": <total sec>, "unit": "sec",
+  line 2 (compact): {"metric": "...", "value": <total sec>, "unit": "sec",
                     "sf": <sf>, "n_queries": N, "queries_file":
                     "BENCH_DETAIL.json", "slowest": {top 5},
                     "failed": [q, ...]}
+  line 3 (watched, printed LAST so a ~2,000-char tail keeps it whole):
+                   line 2's headline fields and "queries": the timings
+                   of the fixed WATCHED keys
 The detail line is also written to BENCH_DETAIL.json next to this
 script, with every key's layer records under "layers": one record per
 timed pass, in pass order (see `run_key`).
@@ -46,6 +48,26 @@ from piper_spark.session import get_spark
 
 
 METRIC = "total wall-clock for all registered queries, noop sink"
+
+#: The keys of the final stdout line, fixed so that runs compare key by
+#: key even when only the last ~2,000 characters of stdout are kept:
+#: the 36 slowest keys by median over BENCH_PIN_pr9's three passes
+#: (all above 1.3 s), then the other keys of perfbench's workloads.
+WATCHED = (
+    "dedup_ensemble", "dedup_containment", "img_decode_jpeg_prog",
+    "video_avi_frames", "text_substring_clean", "pipeline_near_dedup",
+    "dedup_substring", "pipeline_curate", "sim_ann_batch", "video_fingerprint",
+    "text_boilerplate", "img_decode_gif", "dedup_winnow", "dedup_simhash128",
+    "pipeline_signatures", "sim_knn_join", "tpch_q21", "er_match",
+    "dedup_simhash", "sample_quality_mix", "text_self_repeat",
+    "img_decode_png", "dedup_semantic_ivf", "graph_kcore",
+    "pipeline_audio_curate", "sim_ivf_pq", "text_ccnet_buckets", "agg_hll",
+    "tpch_q2", "dedup_audio", "agg_median", "dedup_near_incremental",
+    "sim_ann_two_level", "graph_cc", "cluster_kmeans", "text_lm_score",
+    "dedup_minhash", "sim_topk", "dedup_exact", "dedup_url",
+    "pipeline_image_curate", "img_meta", "audio_wav_energy", "video_frames",
+    "img_channels",
+)
 
 
 def run_to_noop(df) -> None:
@@ -159,6 +181,15 @@ def summary_lines(
     return detail, compact
 
 
+def watched_line(compact: dict, timings: dict[str, float]) -> dict:
+    """The final stdout line: the compact line's headline fields and the
+    timings of the WATCHED keys that ran."""
+    head = ("metric", "value", "unit", "sf", "n_queries", "calib_sec")
+    return {k: compact[k] for k in head} | {
+        "queries": {k: timings[k] for k in WATCHED if k in timings}
+    }
+
+
 def main(argv: list[str] | None = None) -> None:
     parser = argparse.ArgumentParser(description="Time registered queries.")
     parser.add_argument(
@@ -242,7 +273,6 @@ def main(argv: list[str] | None = None) -> None:
                 fh.write("\n")
 
     detail, compact = summary_lines(timings, failed, sf_val, calib_sec)
-    total = detail["value"]
     # Durable copy of the per-query map, immune to stdout clipping,
     # plus the layer records (too long for stdout).
     detail_path = os.path.join(HERE, "BENCH_DETAIL.json")
@@ -256,40 +286,9 @@ def main(argv: list[str] | None = None) -> None:
     # Compact summary: a tail capture that truncates the long detail
     # line above still retains this whole (~300 B) parseable line.
     print(json.dumps(compact))
-    # Round 15 (VERDICT item 2 — measurement fix, no timing change):
-    # the driver's capture keeps only a ~2000-char TAIL of stdout and
-    # parses the last JSON line(s), so the full per-query map — which
-    # previously lived only in the (clipped) first line and in
-    # BENCH_DETAIL.json — never reached PERF_*.json (`per_query: {}`
-    # both rounds). Re-emit the SAME map as short FINAL lines: each a
-    # complete JSON object with the headline fields plus a "queries"
-    # CHUNK (alphabetical, "queries_part": "i/n"), sized so any tail
-    # window >= one line carries parseable per-query timings and a
-    # full-stdout parser can reassemble the whole map from the chunked
-    # lines. Strictly additive: the first detail line, the compact
-    # summary above, BENCH_DETAIL.json and the pin files keep their
-    # round-13/14 shapes, so historical comparisons stay valid.
-    names = sorted(timings)
-    chunk_size = 50
-    chunks = [
-        names[i : i + chunk_size] for i in range(0, len(names), chunk_size)
-    ]
-    for i, chunk in enumerate(chunks, start=1):
-        print(
-            json.dumps(
-                {
-                    "metric": METRIC,
-                    "value": total,
-                    "unit": "sec",
-                    "sf": sf_val,
-                    "n_queries": len(timings),
-                    "calib_sec": calib_sec,
-                    "queries_part": f"{i}/{len(chunks)}",
-                    "queries": {k: timings[k] for k in chunk},
-                },
-                separators=(",", ":"),
-            )
-        )
+    # Last, the watched keys' timings: the line a stdout-tail capture
+    # keeps whole and parses for per-key comparisons.
+    print(json.dumps(watched_line(compact, timings), separators=(",", ":")))
 
 
 if __name__ == "__main__":

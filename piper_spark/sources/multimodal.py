@@ -36,7 +36,7 @@ Numeric semantics mirrored from the reference (tested in tests/):
 from __future__ import annotations
 
 import functools
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -2285,26 +2285,39 @@ _PHASH_DCT = np.cos(
     * np.arange(PHASH_SIZE)[:, None]
     / PHASH_SIZE
 )
+#: Its PHASH_KEEP low-frequency rows: the only part of the DCT the hash reads.
+_PHASH_DCT_LOW = np.ascontiguousarray(_PHASH_DCT[:PHASH_KEEP])
+#: Bit i of a packed hash is vote i.
+_BIT_VALUES = np.uint64(1) << np.arange(64, dtype=np.uint64)
+
+
+def _pack_signed(votes: np.ndarray) -> int:
+    """64 boolean votes → one 64-bit word as Spark's signed long
+    (bit i = votes[i], so vote 63 is the sign bit)."""
+    return int((votes @ _BIT_VALUES).view(np.int64))
 
 
 def phash64(img: np.ndarray) -> int:
-    """64-bit perceptual hash (classic DCT pHash): gray → 32×32
-    INTER_AREA resize → 2D DCT-II → 8×8 low-frequency block → bit per
-    coefficient above the median of the 63 AC terms (DC participates in
-    the bits but not the median, the conventional formulation). Robust
-    to re-encoding and mild noise; sensitive to content changes —
-    property-tested against JPEG re-encode and structural edits."""
-    gray = img.astype(np.float64).mean(axis=2)
-    small = resize_area(
-        np.repeat(gray[:, :, None], 3, axis=2).astype(np.uint8),
-        PHASH_SIZE,
-        PHASH_SIZE,
-    )[:, :, 0].astype(np.float64)
-    dct = _PHASH_DCT @ small @ _PHASH_DCT.T
-    block = dct[:PHASH_KEEP, :PHASH_KEEP].ravel()
-    med = np.median(block[1:])
-    bits = block > med
-    return int(sum(1 << i for i, b in enumerate(bits) if b))
+    """64-bit perceptual hash (classic DCT pHash) as a signed long:
+    gray → 32×32 INTER_AREA resize → 2D DCT-II → 8×8 low-frequency
+    block → bit per coefficient above the median of the 63 AC terms (DC
+    participates in the bits but not the median, the conventional
+    formulation). Robust to re-encoding and mild noise; sensitive to
+    content changes — property-tested against JPEG re-encode and
+    structural edits.
+
+    Bit-identical to the 3-channel formulation tests/test_multimodal.py
+    keeps as the reference: the u8-truncated mean is (r + g + b) // 3,
+    resized on one channel; only the kept DCT rows are computed; the
+    median of 63 values is their rank-31 order statistic."""
+    rgb = img.astype(np.uint16)
+    gray = ((rgb[..., 0] + rgb[..., 1] + rgb[..., 2]) // 3).astype(np.float64)
+    wy = _area_weights(img.shape[0], PHASH_SIZE)
+    wx = _area_weights(img.shape[1], PHASH_SIZE)
+    # Row-stochastic weights over u8 values: no clip needed after rounding.
+    small = np.round(np.dot(np.dot(wy, gray), wx.T))
+    block = (_PHASH_DCT_LOW @ small @ _PHASH_DCT_LOW.T).ravel()
+    return _pack_signed(block > np.partition(block[1:], 31)[31])
 
 
 # ---------------------------------------------------------------------------
@@ -2741,28 +2754,36 @@ PHASH_PLANT_MOD, PHASH_PLANT_OFFSET = 40, 1 << 40
 
 
 def _perturb(payload: bytes) -> bytes:
-    b = bytearray(payload)
-    for i in range(0, len(b), 97):
-        b[i] = (b[i] + 1) % 256
-    return bytes(b)
+    b = np.frombuffer(payload, dtype=np.uint8).copy()
+    b[::97] += 1  # u8 wraps 255 → 0
+    return b.tobytes()
+
+
+def _planted_hashes(
+    batches: Iterator[pd.DataFrame], hash_fn: Callable[[bytes], int]
+) -> Iterator[pd.DataFrame]:
+    """mapInPandas worker: (doc_id, hash_fn(payload)) per row, plus the
+    perturbed twin at doc_id + PHASH_PLANT_OFFSET for every
+    PHASH_PLANT_MOD-th doc. `hash_fn` returns Spark's signed long."""
+    for pdf in batches:
+        ids, hashes = [], []
+        for doc_id, payload in zip(pdf["doc_id"].tolist(), pdf["payload"]):
+            payload = bytes(payload)
+            ids.append(doc_id)
+            hashes.append(hash_fn(payload))
+            if doc_id % PHASH_PLANT_MOD == 0:
+                ids.append(doc_id + PHASH_PLANT_OFFSET)
+                hashes.append(hash_fn(_perturb(payload)))
+        yield pd.DataFrame(
+            {
+                "doc_id": np.array(ids, dtype=np.int64),
+                "phash": np.array(hashes, dtype=np.int64),
+            }
+        )
 
 
 def _phash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    rows = []
-    for pdf in batches:
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            if len(payload) == 0:
-                continue
-            for did, pay in ((int(doc_id), bytes(payload)),) + (
-                ((int(doc_id) + PHASH_PLANT_OFFSET, _perturb(bytes(payload))),)
-                if doc_id % PHASH_PLANT_MOD == 0
-                else ()
-            ):
-                h = phash64(fake_image(pay))
-                # sign-extend to fit Spark's signed long
-                rows.append((did, h - (1 << 64) if h >= (1 << 63) else h))
-        yield pd.DataFrame(rows, columns=["doc_id", "phash"])
-        rows = []
+    return _planted_hashes(batches, lambda p: phash64(fake_image(p)))
 
 
 @register("img_phash")  # DCT floats aren't SQL-reproducible → rows-only
@@ -3715,21 +3736,12 @@ def phash_int64(payload: bytes) -> tuple[int, int]:
     no midpoint averaging), bit i set iff coefficient i > median (DC
     votes but is excluded from the median, the classic pHash
     formulation `phash64` also uses)."""
-    n = len(payload)
-    P = (
-        np.frombuffer(payload, dtype=np.uint8)[
-            np.arange(PHASH_INT_N * PHASH_INT_N) % n
-        ]
-        .reshape(PHASH_INT_N, PHASH_INT_N)
-        .astype(np.int64)
-    )
+    P = np.resize(
+        np.frombuffer(payload, dtype=np.uint8), (PHASH_INT_N, PHASH_INT_N)
+    ).astype(np.int64)
     flat = (_PHASH_INT_C @ P @ _PHASH_INT_C.T).ravel()
-    med = int(np.sort(flat[1:])[31])
-    h = 0
-    for i, v in enumerate(flat):
-        if v > med:
-            h += -(1 << 63) if i == 63 else (1 << i)
-    return h, med
+    med = np.partition(flat[1:], 31)[31]
+    return _pack_signed(flat > med), int(med)
 
 
 def _phash_int_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -3817,20 +3829,7 @@ def img_phash_int(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _phash_int_plant_batches(
     batches: Iterator[pd.DataFrame],
 ) -> Iterator[pd.DataFrame]:
-    """Plant-aware signature worker: every PHASH_PLANT_MOD-th doc also
-    emits its perturbed twin at doc_id + PHASH_PLANT_OFFSET (the
-    `img_phash` plant, +1 on every 97th payload byte)."""
-    rows = []
-    for pdf in batches:
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            doc_id, payload = int(doc_id), bytes(payload)
-            rows.append((doc_id, phash_int64(payload)[0]))
-            if doc_id % PHASH_PLANT_MOD == 0:
-                rows.append(
-                    (doc_id + PHASH_PLANT_OFFSET, phash_int64(_perturb(payload))[0])
-                )
-        yield pd.DataFrame(rows, columns=["doc_id", "phash"])
-        rows = []
+    return _planted_hashes(batches, lambda p: phash_int64(p)[0])
 
 
 #: Hamming threshold for integer-pHash pairs (the `img_phash`

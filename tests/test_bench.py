@@ -87,6 +87,37 @@ def test_layer_record_per_key(spark, capsys):
     assert "timed b_bad failed: RuntimeError" in capsys.readouterr().err
 
 
+def _unresolved(spark, sf_dir):
+    return spark.range(3).select("no_such_col")
+
+
+def test_jvm_error_record_keeps_class_and_message(spark):
+    """With call-site capture off, an analysis error still reaches the
+    record with its exception class and message."""
+    failed: set[str] = set()
+    layers: dict[str, list[dict]] = {}
+    bench.timed_pass(spark, {"bad": _unresolved}, SF_SMOKE, False, failed, layers)
+    assert failed == {"bad"}
+    err = layers["bad"][0]["error"]
+    assert err.startswith("AnalysisException: [UNRESOLVED_COLUMN"), err
+    assert "no_such_col" in err
+
+
+def test_watched_line_is_registry_keys_and_fits_the_tail():
+    """The final line names a fixed set of ~45 registry keys and stays
+    well under a 2,000-character stdout tail with realistic figures."""
+    from piper_spark import registry
+
+    assert 40 <= len(bench.WATCHED) <= 50
+    assert len(set(bench.WATCHED)) == len(bench.WATCHED)
+    assert set(bench.WATCHED) <= set(registry.all_queries())
+    timings = {k: 12.345 for k in registry.all_queries()}
+    _, compact = bench.summary_lines(timings, set(), 0.1, 0.123)
+    line = bench.watched_line(compact, timings)
+    assert list(line["queries"]) == list(bench.WATCHED)
+    assert len(json.dumps(line, separators=(",", ":"))) < 1800
+
+
 def test_keys_flag_warms_up_and_times_only_those_keys(
     spark, monkeypatch, tmp_path, capsys
 ):
@@ -105,6 +136,7 @@ def test_keys_flag_warms_up_and_times_only_those_keys(
     monkeypatch.setattr(bench, "get_spark", lambda name: spark)
     monkeypatch.setattr(bench, "HERE", str(tmp_path))
     sf_dir = str(tmp_path / "sf0.5")
+    monkeypatch.setattr(bench, "WATCHED", ("z", "not_run"))
     monkeypatch.setenv("SPARK_GRAFT_SF_DIR", sf_dir)
     monkeypatch.delenv("SPARK_GRAFT_BENCH_PINS", raising=False)
     bench.main(["--keys", "z", "x"])
@@ -116,6 +148,9 @@ def test_keys_flag_warms_up_and_times_only_those_keys(
     assert set(detail["queries"]) == set(detail["layers"]) == {"x", "z"}
     lines = [json.loads(s) for s in capsys.readouterr().out.splitlines()]
     assert lines[1]["n_queries"] == 2
+    assert len(lines) == 3
+    assert list(lines[2]["queries"]) == ["z"]
+    assert lines[2]["value"] == lines[1]["value"]
 
     with pytest.raises(SystemExit):
         bench.main(["--keys", "x", "no_such_key"])

@@ -13,6 +13,8 @@ import struct
 
 import numpy as np
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from piper_spark.sources.multimodal import (
     _area_weights,
@@ -601,6 +603,80 @@ def test_phash_survives_jpeg_reencode_and_flags_edits():
     ham = lambda a, b: bin((a ^ b) & (2**64 - 1)).count("1")  # noqa: E731
     assert ham(h0, h1) <= 6  # lossy re-encode: perceptually same
     assert ham(h0, h2) >= 16  # mirror: structurally different
+
+
+def _phash64_reference(img: np.ndarray) -> int:
+    """The pHash as first written: the gray image copied into three u8
+    channels through `resize_area`, the full 32×32 DCT, `np.median` and
+    a Python bit loop. The kernel must match it bit for bit, because
+    `img_phash`'s rows depend on every bit."""
+    from piper_spark.sources.multimodal import _PHASH_DCT
+
+    gray = img.astype(np.float64).mean(axis=2)
+    small = resize_area(
+        np.repeat(gray[:, :, None], 3, axis=2).astype(np.uint8), 32, 32
+    )[:, :, 0].astype(np.float64)
+    dct = _PHASH_DCT @ small @ _PHASH_DCT.T
+    block = dct[:8, :8].ravel()
+    bits = block > np.median(block[1:])
+    return int(sum(1 << i for i, b in enumerate(bits) if b))
+
+
+def _reference_phash_batches(batches):
+    from piper_spark.sources.multimodal import _planted_hashes
+
+    def signed(h: int) -> int:
+        return h - (1 << 64) if h >= (1 << 63) else h
+
+    return _planted_hashes(
+        batches, lambda p: signed(_phash64_reference(fake_image(p)))
+    )
+
+
+@given(
+    st.one_of(
+        st.tuples(st.integers(1, 128), st.integers(1, 128)),
+        st.just((224, 224)),
+    ),
+    st.sampled_from(("random", "gray", "extreme")),
+    st.integers(0, 2**32 - 1),
+)
+@settings(max_examples=300, deadline=None)
+def test_phash64_is_bit_identical_to_the_reference(shape, pixels, seed):
+    from piper_spark.sources.multimodal import phash64
+
+    rng = np.random.default_rng(seed)
+    if pixels == "gray":  # R = G = B: the mean is exact, truncation a no-op
+        img = np.repeat(rng.integers(0, 256, (*shape, 1), dtype=np.uint8), 3, axis=2)
+    elif pixels == "extreme":  # only 0 and 255: rounding at the u8 bounds
+        img = rng.choice(np.array([0, 255], dtype=np.uint8), (*shape, 3))
+    else:
+        img = rng.integers(0, 256, (*shape, 3), dtype=np.uint8)
+    assert phash64(img) & (2**64 - 1) == _phash64_reference(img)
+
+
+def test_img_phash_rows_match_the_reference_worker(spark, monkeypatch):
+    """`img_phash` at the smoke scale gives the same pair rows whether
+    its hashes come from the kernel or from the reference worker."""
+    import sys
+
+    from pyspark import cloudpickle
+
+    import piper_spark.sources.multimodal as mm
+    from tests.conftest import SF_SMOKE
+
+    got = sorted(mm.img_phash(spark, SF_SMOKE).collect())
+    assert got
+    # Ship this module's reference to the workers by value: they may
+    # not have the test directory on their path.
+    module = sys.modules[__name__]
+    cloudpickle.register_pickle_by_value(module)
+    try:
+        monkeypatch.setattr(mm, "_phash_batches", _reference_phash_batches)
+        want = sorted(mm.img_phash(spark, SF_SMOKE).collect())
+    finally:
+        cloudpickle.unregister_pickle_by_value(module)
+    assert got == want
 
 
 def test_img_phash_recovers_planted_near_dups(spark):

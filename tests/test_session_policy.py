@@ -79,6 +79,53 @@ def test_table_memo_keyed_on_dir_and_name(spark):
     )
 
 
+def test_table_reads_footer_schema_without_a_job(spark):
+    """Each table's first read passes its parquet footer schema, which
+    equals the one Spark infers, and fires no schema-inference job."""
+    import uuid
+
+    from piper_spark.session import TABLE_NAMES, _read_parquet
+
+    sf = "/root/testdata/sf0.01"
+    sc = spark.sparkContext
+    group = f"footer-schema-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "footer schema reads")
+    try:
+        footer = {n: _read_parquet(spark, f"{sf}/{n}.parquet") for n in TABLE_NAMES}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    for name in TABLE_NAMES:
+        inferred = spark.read.parquet(f"{sf}/{name}.parquet").schema
+        assert footer[name].schema == inferred, name
+
+
+def test_nanosecond_events_keep_the_inferred_read(spark, tmp_path):
+    """A TIMESTAMP(NANOS) events file is read by Spark's legacy
+    inference (the footer schema cannot name it) and normalized to
+    session-UTC microseconds, truncating the nanoseconds."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import TimestampType
+
+    ns = [1_700_000_000_123_456_789, 1_700_000_001_000_000_999]
+    pq.write_table(
+        pa.table({"event_id": [1, 2], "ts": pa.array(ns, pa.timestamp("ns"))}),
+        tmp_path / "events.parquet",
+        coerce_timestamps=None,
+        version="2.6",
+    )
+    df = table(spark, str(tmp_path), "events")
+    assert df.schema["ts"].dataType == TimestampType()
+    got = df.orderBy("event_id").selectExpr("unix_micros(ts) AS us").collect()
+    assert [r.us for r in got] == [n // 1000 for n in ns]
+
+
+def test_call_site_capture_is_off(spark):
+    """get_spark turns off PySpark's per-call call-site capture."""
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+
+
 def test_fan_out_skips_shuffled_plans(spark):
     """Round-15 (ADVICE 2): a plan already containing an Exchange comes
     back UNCHANGED and unprobed — `.rdd` on an Exchange-bearing plan
